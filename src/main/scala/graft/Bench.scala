@@ -1,41 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // written by the throttle probe's spin so the JIT can't eliminate it
   @volatile private var probeSink: Long = 0L
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       s"${graft.queries.Fixtures.testdataRoot}/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // subset co-partitioning (public Spark conf, default true since
-      // 3.3): a join keyed (bkey, grp) with both sides already
-      // hash-partitioned on bkey must NOT re-shuffle the bucketed
-      // store to the full key — the capped wave-vs-index join
-      // (MinhashPipeline.verifiedDupPairsCapped) depends on this to
-      // keep the band table exchange-free under its widened join key
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // A/B knob (r17, VERDICT r16 item 3): AQE partition coalescing
-      // sized by BYTES (parallelismFirst=false respects the advisory
-      // target — Spark's own production recommendation) instead of the
-      // parallelism-first default. Off unless set; adopted only if the
-      // full-suite A/B shows a box-state-clean win (the decision and
-      // both totals live in OPTIMIZATION_r17.md).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        if (sys.env.get("SPARK_GRAFT_BENCH_BYTESIZED").contains("1")) "false"
-        else "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // clearBlocks() unpersists locally-checkpointed RDDs, which logs a
-    // benign "lineage has been truncated" WARN per block (each query
-    // rebuilds from source); silence that one category so real
-    // warnings stay visible in the bench log
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     // optional comma-separated substring filter for targeted perf work
     // (driver runs with it unset = full catalog)
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
@@ -54,19 +26,6 @@ object Bench {
     // the recorded per-run loadavg makes any surviving outlier
     // self-explaining in the artifact.
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3).max(1)
-    // A/B knob for the measured heavy-neighbor JVM cost (+0.5-1.5 s a
-    // query inherits from an expensive predecessor, which clearBlocks()
-    // alone does not recover — artifacts/r15_q110_isolation.md): when
-    // set, force a full GC and a short settle between queries so each
-    // starts from a comparable heap/JIT neighborhood. Off by default;
-    // adopted only if the A/B shows it recovers >=half the inflation.
-    val gcSettle = sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")
-    /** Free cached tables AND localCheckpoint/persist blocks so one
-      * query's pinned blocks never inflate the next query's time. */
-    def clearBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
     /** 1-minute loadavg at the moment a run starts — recorded per run
       * so a co-tenant spike on this shared box is visible in the
       * artifact itself instead of being reconstructed forensically a
@@ -98,37 +57,20 @@ object Bench {
         val cpu = (mx.getCurrentThreadCpuTime - c0).toDouble
         if (cpu > 0) (System.nanoTime() - t0) / cpu else -1.0
       } catch { case _: Throwable => -1.0 }
-    val results = selected.map { q =>
-      val samples = (1 to runs).map { _ =>
-        val la = loadavg()
-        val st = stretch()
-        val t0 = System.nanoTime()
-        try { q.fn(spark, sfDir).count() } catch { case e: Throwable =>
-          // stderr, so the stdout JSON line stays parseable — but never
-          // silent: a swallowed failure looks like a fast query
-          System.err.println(s"[bench] ${q.name} FAILED: " +
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-          -1L
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        clearBlocks()
-        if (gcSettle) { System.gc(); Thread.sleep(250) }
-        (dt, la, st)
-      }
-      q.name -> samples
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v.map(_._1).min }
+    val results = Runner.run(spark, selected, sfDir, runs)((loadavg(), stretch()))
+    def perQuery(f: Runner.Result[(Double, Double)] => String): String =
+      results.map(r => s"\"${r.name}\":" + f(r)).mkString("{", ",", "}")
+    // minima of the queries that never failed; failed ones are named
+    // in failed_queries instead, so a failure never looks fast
+    val qs = results.filterNot(_.failed).map(r => s"\"${r.name}\":${r.best}")
       .mkString("{", ",", "}")
-    val allRuns = results.map { case (k, v) =>
-      s"\"" + k + "\":" + v.map(_._1).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val loads = results.map { case (k, v) =>
-      s"\"" + k + "\":" + v.map(_._2).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val stretches = results.map { case (k, v) =>
-      s"\"" + k + "\":" + v.map(s => f"${s._3}%.2f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2.map(_._1).min).sum else 0.0
+    val allRuns = perQuery(_.samples.map(_.sec).mkString("[", ",", "]"))
+    val loads = perQuery(_.samples.map(_.probe._1).mkString("[", ",", "]"))
+    val stretches = perQuery(_.samples.map(s => f"${s.probe._2}%.2f").mkString("[", ",", "]"))
+    val total = Runner.total(results)
+    val failedNames = results.filter(_.failed).map(_.name)
+    val failed = s""""failed":${failedNames.size},""" +
+      s""""failed_queries":${failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     // Contention self-identification in the HEADLINE: r10's driver
     // artifact read 257.6 s vs 171.7 s on a judge rerun and nothing in
     // the stdout line explained the gap — the per-run loadavg that
@@ -137,14 +79,14 @@ object Bench {
     // sample; spread_max names the query whose best-to-worst run gap
     // is largest (a box-wide stall shows up as one query 5-25x its
     // steady cost in a single run).
-    val allLoads = results.flatMap(_._2.map(_._2)).filter(_ >= 0)
+    val allLoads = results.flatMap(_.samples.map(_.probe._1)).filter(_ >= 0)
     val laMean = if (allLoads.nonEmpty) allLoads.sum / allLoads.size else -1.0
     val laMax = if (allLoads.nonEmpty) allLoads.max else -1.0
-    val allStretch = results.flatMap(_._2.map(_._3)).filter(_ >= 0)
+    val allStretch = results.flatMap(_.samples.map(_.probe._2)).filter(_ >= 0)
     val stMean = if (allStretch.nonEmpty) allStretch.sum / allStretch.size else -1.0
     val stMax = if (allStretch.nonEmpty) allStretch.max else -1.0
     val (spreadQ, spreadSec) = results
-      .map { case (k, v) => (k, v.map(_._1).max - v.map(_._1).min) }
+      .map(r => (r.name, r.samples.map(_.sec).max - r.best))
       .sortBy(-_._2).headOption.getOrElse(("none", 0.0))
     // stdout gets ONLY the headline fields: with 100+ queries the
     // per-query map alone outgrows the driver's tail capture, which
@@ -177,11 +119,11 @@ object Bench {
       f""""loadavg_mean":$laMean%.2f,"loadavg_max":$laMax%.2f,""" +
       f""""stretch_mean":$stMean%.2f,""" +
       f""""spread_max_query":"$spreadQ","spread_max_sec":$spreadSec%.2f,""" +
-      s""""gc_settle":$gcSettle,"sf":"$sfDir"}""")
+      s"""$failed,"sf":"$sfDir"}""")
     val full = f"""{"box":"$box","stretch_max":$stMax%.2f,"blip_frac":$blipFrac%.3f,""" +
       s""""metric":"total","value":$total,"unit":"sec","runs":$runs,""" +
       s""""queries":$qs,"all_runs":$allRuns,"loadavg":$loads,""" +
-      s""""stretch":$stretches,"gc_settle":$gcSettle,"sf":"$sfDir"}"""
+      s""""stretch":$stretches,$failed,"sf":"$sfDir"}"""
     // absolute paths: a run from another working directory must not
     // scatter the detail files, and a failed write must say so.
     // Two copies of the same detail JSON:

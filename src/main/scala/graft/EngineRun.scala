@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Engine-only scale runner: executes named catalog queries against a
   * data directory WITHOUT the DuckDB compare — the scale-evidence path
   * for queries whose ORACLE is infeasible at a given SF
@@ -19,44 +17,19 @@ object EngineRun {
   def main(args: Array[String]): Unit = {
     val Array(dataDir, namesCsv) = args
     val names = namesCsv.split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // subset co-partitioning (public Spark conf, default true since
-      // 3.3): a join keyed (bkey, grp) with both sides already
-      // hash-partitioned on bkey must NOT re-shuffle the bucketed
-      // store to the full key — the capped wave-vs-index join
-      // (MinhashPipeline.verifiedDupPairsCapped) depends on this to
-      // keep the band table exchange-free under its widened join key
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
-    def clearBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
     val sel = graft.queries.Catalog.all
       .filter(q => names.exists(q.name.contains))
-    val cells = sel.map { q =>
-      val t0 = System.nanoTime()
-      val body =
-        try {
-          val rows = q.fn(spark, dataDir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          f""""sec":$dt%.2f,"rows":$rows"""
-        } catch { case e: Throwable =>
-          val dt = (System.nanoTime() - t0) / 1e9
-          val msg = (e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage).take(120))
-            .replaceAll("[\"\\\\\\n\\r\\t]", " ")
-          f""""sec":$dt%.2f,"err":"$msg""""
-        }
-      clearBlocks()
-      s""""${q.name}":{$body}"""
+    val cells = Runner.run(spark, sel, dataDir, 1)(()).map { r =>
+      val s = r.samples.head
+      val body = s.rows match {
+        case Right(rows) => f""""sec":${s.sec}%.2f,"rows":$rows"""
+        case Left(err) =>
+          val msg = err.replaceAll("[\"\\\\\\n\\r\\t]", " ")
+          f""""sec":${s.sec}%.2f,"err":"$msg""""
+      }
+      s""""${r.name}":{$body}"""
     }
     println(s"""{"metric":"engine_only","dir":"$dataDir",""" +
       s""""queries":${cells.mkString("{", ",", "}")}}""")

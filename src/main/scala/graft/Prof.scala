@@ -5,996 +5,35 @@ import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
 import graft.functions.DedupConfig.{K, Bands, Rpb, JaccThreshold, sizeRatioOk}
 
-/** Stage-level profiler for perf work on the heavy queries: times each
-  * phase of the Jaccard/MinHash dedup family in isolation so
-  * optimization effort goes where the seconds are. Not part of the
-  * driver gates; run with
-  * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Prof"`. */
+/** Stage-level profiler for perf work on the dedup family, one mode
+  * per run (not part of the gates):
+  *  - `family`: candidate-stage counts and timings for q88/q99/q104
+  *    (OPTIMIZATION_r17.md);
+  *  - `semscale`: q131's capped spill pairs at the pinned K=8 vs an
+  *    occupancy-budget K (COVERAGE.md, artifacts/r16_scaling_study.md).
+  *
+  * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Prof family|semscale"` */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       s"${graft.queries.Fixtures.testdataRoot}/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // subset co-partitioning (public Spark conf, default true since
-      // 3.3): a join keyed (bkey, grp) with both sides already
-      // hash-partitioned on bkey must NOT re-shuffle the bucketed
-      // store to the full key — the capped wave-vs-index join
-      // (MinhashPipeline.verifiedDupPairsCapped) depends on this to
-      // keep the band table exchange-free under its widened join key
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val mode = args.headOption.getOrElse("")
+    require(Set("family", "semscale")(mode), s"usage: graft.Prof family|semscale (got '$mode')")
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
-
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    time("read+count")(docs.count())
-
-    // `runMain graft.Prof family` runs ONLY the candidate-stage counts
-    // for q88/q99/q104 (the r7 enriched-corpus comparison) and exits;
-    // with no arg the full stage profile below runs as before.
-    if (args.contains("family")) { profFamily(spark, docs); spark.stop(); return }
-    // `runMain graft.Prof attrib` -> per-stage split of the two big
-    // engine-sf1 rows VERDICT r10 flagged as unattributed (q58, q52)
-    if (args.contains("attrib")) { profAttrib(spark, docs); spark.stop(); return }
-    // `runMain graft.Prof wordcap` -> q127 hot-bucket quality numbers
-    // (capped vs uncapped candidates/pairs + planted-copy recall) at
-    // the word-bigram granularity, engine-side
-    if (args.contains("wordcap")) { profWordcap(spark, docs); spark.stop(); return }
-    // `runMain graft.Prof semcap` -> q131 hot-cell quality numbers
-    // (capped vs uncapped candidates/pairs, planted-copy recall, flood
-    // pair bound) on the planted-flood embedding corpus, engine-side
-    if (args.contains("semcap")) { profSemcap(spark, sfDir); spark.stop(); return }
-    // `runMain graft.Prof semcapdiag` -> per-lost-pair diagnosis of
-    // planted pairs the q131 cap drops (cell, fingerprint-family size,
-    // cap-window ranks) — the r11 "2855/2856 unexplained" follow-up
-    if (args.contains("semcapdiag")) { profSemcapDiag(spark, sfDir); spark.stop(); return }
-    // `runMain graft.Prof semdrift` -> per-stage attribution of the
-    // q128 lifecycle (the r12 steady-bench +2.5s mover)
-    if (args.contains("semdrift")) { profSemDrift(spark, sfDir); spark.stop(); return }
-    // `runMain graft.Prof mmrecall` -> q130 multimodal-ANN quality:
-    // recall@3 of the trained-K cell-blocked search vs the exact
-    // brute-force top-3 over the FULL probe set, with per-stage
-    // timings (train / assign / search / brute)
-    if (args.contains("mmrecall")) { profMmRecall(spark, docs); spark.stop(); return }
-    // `runMain graft.Prof mmlife` -> per-stage attribution of the
-    // q133/q136 multimodal index lifecycle (the two most expensive
-    // steady-bench rows after r13)
-    if (args.contains("mmlife")) { profMmLife(spark, sfDir); spark.stop(); return }
-    // `runMain graft.Prof compactlife` -> per-stage attribution of the
-    // q110 batch epoch-compaction lifecycle (the r13 steady bench's
-    // one >0.9s r11->r13 mover, VERDICT r13 item 4)
-    if (args.contains("compactlife")) { profCompactLife(spark, sfDir); spark.stop(); return }
-    // `runMain graft.Prof streamlife` -> attribution of q109's wall
-    // (the suite's most expensive steady-bench row, VERDICT r15
-    // item 3): splits each of its THREE stream lifecycles into
-    // Structured Streaming machinery (start/schedule/commit-log/stop)
-    // vs in-batch dedup work, with a no-op stream as the floor control
-    if (args.contains("streamlife")) { profStreamLife(spark, sfDir); spark.stop(); return }
-    // `runMain graft.Prof semscale` -> the r16 scaling study's q131
-    // follow-up: the same corpus + cappedSpillPairs at the gate's
-    // pinned K=8 vs a q134-style occupancy-budget K, engine-only —
-    // demonstrates the measured sf10 quadratic is the pinned-gate
-    // price (cold-cell occupancy grows ∝ n/K at fixed K), not the
-    // production design (measured K holds occupancy ~= OccBudget)
-    if (args.contains("semscale")) { profSemScale(spark, sfDir); spark.stop(); return }
-
-    val sh = docs.select(col("doc_id"), col("lang"), TF.shingles(col("text"), 3).as("sh"))
-    time("shingles")(sh.count())
-
-    // composed shingle+hash chain vs the native one-pass expression
-    // (sum() forces full evaluation of every element)
-    time("hl composed")(docs.select(transform(TF.shingles(col("text"), 3),
-      s => TF.shingleHash3(s)).as("hl")).select(sum(size(col("hl")))).head())
-    time("hl native shingle_hashes")(docs.select(TF.shingleHashes(col("text")).as("hl"))
-      .select(sum(size(col("hl")))).head())
-
-    val bm = time("withBitmap build")(
-      graft.operators.SetSimJoin.withBitmap(sh, "doc_id", "sh")
-        .select(col("doc_id"), col("lang"), col("sz"), col("bm"))
-        .localCheckpoint(true))
-    time("withBitmap count")(bm.count())
-
-    // pair join WITHOUT popcount (enumeration + ratio filter only)
-    val enum0 = bm.as("a").join(broadcast(bm.as("b")),
-      col("a.lang") === col("b.lang") && col("a.doc_id") < col("b.doc_id") &&
-        sizeRatioOk(col("a.sz"), col("b.sz")))
-    time("pair enum (no popcount)")(enum0.count())
-
-    val pairs = enum0
-      .withColumn("jacc_x1000", graft.operators.SetSimJoin.jaccardX1000(
-        col("a.bm"), col("b.bm"), col("a.sz"), col("b.sz")))
-      .filter(col("jacc_x1000") >= JaccThreshold)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"), col("jacc_x1000"))
-    val nPairs = time("pair enum + popcount")(pairs.count())
-    println(s"PROF   near-dup pairs: $nPairs")
-
-    val cached = pairs.localCheckpoint(true)
-    time("CC on cached pairs")(
-      graft.operators.ConnectedComponents.components(cached, "doc_a", "doc_b").count())
-
-    // q41 phases
-    val sig = time("q41 sig build")(
-      graft.operators.SetSimJoin.withBitmap(
-          docs.select(col("doc_id"), TF.shingles(col("text"), 3).as("sh")), "doc_id", "sh")
-        .withColumn("hl", transform(col("sh"), s => TF.shingleHash3(s)))
-        .withColumn("sig", TF.minhashSignatureNative(col("hl"), K))
-        .localCheckpoint(true))
-    val bands = sig.select(col("doc_id"), col("sz"), col("bm"),
-      posexplode(array((0 until Bands).map(b =>
-        TF.bandKey(col("sig"), b, Rpb)): _*)).as(Seq("band_idx", "band_key")))
-    time("q41 bands count")(bands.count())
-    val cand = bands.as("a").join(broadcast(bands.as("b")),
-      col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        sizeRatioOk(col("a.sz"), col("b.sz")))
-    time("q41 candidates")(println(s"PROF   q41 cand rows: ${cand.count()}"))
-    val verified = cand
-      .withColumn("jacc_x1000", graft.operators.SetSimJoin.jaccardX1000(
-        col("a.bm"), col("b.bm"), col("a.sz"), col("b.sz")))
-      .filter(col("jacc_x1000") >= JaccThreshold)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"), col("jacc_x1000"))
-    time("q41 verify")(verified.count())
-    time("q41 distinct")(verified.distinct().count())
-
-    // q92 prefix-filter phases
-    val bg = docs
-      .select(col("doc_id"), TF.tokens(lower(col("text"))).as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), array_distinct(
-        transform(sequence(lit(1), size(col("t")) - 1),
-          i => TF.polyHash(concat(element_at(col("t"), i), lit(" "),
-            element_at(col("t"), i + 1))))).as("sh"))
-    val base = bg.select(col("doc_id").as("__id"), col("sh").as("__sh"))
-      .withColumn("__sz", size(col("__sh"))).filter(col("__sz") > 0)
-      .localCheckpoint(true)
-    time("q92 base build")(base.count())
-    val el = base.select(col("__id"), explode(col("__sh")).as("__e"))
-    time("q92 explode")(println(s"PROF   q92 el rows: ${el.count()}"))
-    val freq = el.groupBy(col("__e")).agg(count(lit(1)).as("__f"))
-    time("q92 freq")(println(s"PROF   q92 universe: ${freq.count()}"))
-    val ordered = el.join(freq, "__e").groupBy(col("__id"))
-      .agg(transform(sort_array(collect_list(struct(col("__f"), col("__e")))),
-        x => x("__e")).as("__osh")).localCheckpoint(true)
-    time("q92 ordered arrays")(ordered.count())
-    val pfx = base.select(col("__id"), col("__sz")).join(ordered, "__id")
-      .withColumn("__plen", expr("CAST(__sz - CEIL(__sz * 700 / 1000.0) + 1 AS INT)"))
-      .select(col("__id"), col("__sz"),
-        explode(slice(col("__osh"), lit(1), col("__plen"))).as("__e"))
-      .localCheckpoint(true)
-    time("q92 prefix explode")(println(s"PROF   q92 pfx rows: ${pfx.count()}"))
-    val cand92 = pfx.select(col("__id").as("id_a"), col("__sz").as("sz_a"), col("__e"))
-      .join(pfx.select(col("__id").as("id_b"), col("__sz").as("sz_b"), col("__e")), "__e")
-      .filter(col("id_a") < col("id_b") &&
-        col("sz_a") * 700 <= col("sz_b") * 1000 &&
-        col("sz_b") * 700 <= col("sz_a") * 1000)
-      .select(col("id_a"), col("id_b"))
-    time("q92 cand join")(println(s"PROF   q92 cand rows: ${cand92.count()}"))
-    val cd = cand92.distinct().localCheckpoint(true)
-    time("q92 cand distinct")(println(s"PROF   q92 cand distinct: ${cd.count()}"))
-    val ver = cd
-      .join(base.select(col("__id").as("id_a"), col("__sh").as("sh_a")), "id_a")
-      .join(base.select(col("__id").as("id_b"), col("__sh").as("sh_b")), "id_b")
-      .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("jacc_x1000", expr(
-        "CAST(__i * 1000 DIV (size(sh_a) + size(sh_b) - __i) AS BIGINT)"))
-      .filter(col("jacc_x1000") >= 700)
-    time("q92 verify")(println(s"PROF   q92 pairs: ${ver.count()}"))
-
-    // NOTE: the staged timers above under-report — eager
-    // localCheckpoint jobs run at DEFINITION time, outside the timed
-    // count. The end-to-end number below is the true cost; on this
-    // corpus it is dominated by the exact verify of the ~quadratic
-    // candidate set (931-bigram universe ⇒ prefix tokens aren't rare).
-    time("q92 operator end-to-end")(println(s"PROF   q92 op pairs: " +
-      graft.operators.SetSimJoin.prefixFilterJoin(bg, "doc_id", "sh", 700).count()))
-
-    // q41's band scheme re-run over WORD-BIGRAM shingles (the
-    // production shingling — Lee et al. use word n-grams) instead of
-    // char 3-grams: isolates how much of q41's candidate degeneracy is
-    // the SHINGLE GRANULARITY (every doc shares the common char
-    // trigrams, so char-level Jaccard stays high even on a realistic
-    // vocabulary) vs the corpus. `bg` is the hashed-bigram table built
-    // for the q92 section above.
-    val wsig = bg.select(col("doc_id"), col("sh").as("hl"))
-      .withColumn("sz", size(col("hl")).cast("long"))
-      .filter(col("sz") > 0)
-      .withColumn("sig", TF.minhashSignatureNative(col("hl"), K))
-      .localCheckpoint(true)
-    val wbands = wsig.select(col("doc_id"), col("sz"),
-      posexplode(array((0 until Bands).map(b =>
-        TF.bandKey(col("sig"), b, Rpb)): _*)).as(Seq("band_idx", "band_key")))
-    val wcand = wbands.as("a").join(wbands.as("b"),
-      col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        sizeRatioOk(col("a.sz"), col("b.sz")))
-    time("q41w word-shingle bands")(
-      println(s"PROF   q41w cand rows: ${wcand.count()}"))
-
+    if (mode == "family") {
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      time("read+count")(docs.count())
+      profFamily(spark, docs)
+    } else profSemScale(spark, sfDir)
     spark.stop()
   }
 
-  /** q127 hot-bucket quality at WORD-BIGRAM granularity, engine-side
-    * (the r10_hotcap_quality.json method, Spark instead of DuckDB —
-    * the uncapped DuckDB verify is exactly what's infeasible beyond
-    * sf0.01 on the degenerate driver vocabulary: abandoned at 2h wall
-    * at sf0.1 in r11). Prints candidates/verified pairs for the
-    * uncapped (q108) and capped (q127) forms on the SAME
-    * planted-copy corpus, plus planted-pair survival. */
-  private def profWordcap(spark: SparkSession,
-                          docs: org.apache.spark.sql.DataFrame): Unit = {
-    import graft.functions.MinhashPipeline.{signedDocsWord, bandKeysOf, capBands}
-    import graft.functions.DedupConfig.HotBucketCap
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val d = docs.select(col("doc_id"), col("text"))
-    val corpus = d.unionByName(d.filter(col("doc_id") % 7 === 0)
-      .withColumn("doc_id", col("doc_id") + 100000L))
-    val sig = time("word signing")(signedDocsWord(corpus).localCheckpoint(true))
-    // one guaranteed exact-copy pair (a, a+100000) per planted doc.
-    // Count the PLANTING predicate, not "doc_id >= 100000": gen_sf
-    // corpora key-shift their copies by 1e6·k, so an id-range test
-    // counts those as planted and inflates the denominator (the sf1
-    // 7143/52143 artifact — actual recall was 7143/7143).
-    val planted = d.filter(col("doc_id") % 7 === 0).count()
-    def verify(cand: org.apache.spark.sql.DataFrame) = cand
-      .join(sig.select(col("doc_id").as("doc_a"),
-        col("hl").as("hl_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sig.select(col("doc_id").as("doc_b"),
-        col("hl").as("hl_b"), col("sz").as("sz_b")), "doc_b")
-      .filter(sizeRatioOk(col("sz_a"), col("sz_b")))
-      .withColumn("inter",
-        call_function("sorted_inter_count", col("hl_a"), col("hl_b")))
-      .withColumn("jacc_x1000", expr("inter * 1000 DIV (sz_a + sz_b - inter)"))
-      .filter(col("jacc_x1000") >= JaccThreshold)
-    def plantedKept(pairs: org.apache.spark.sql.DataFrame) = pairs
-      .filter(col("doc_b") === col("doc_a") + 100000L &&
-        col("doc_a") % 7 === 0).count()
-    // capped form (q127)
-    val capped = time("capBands")(
-      capBands(sig, HotBucketCap).localCheckpoint(true))
-    val candC = capped.as("a").join(capped.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.grp") === col("b.grp") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct().localCheckpoint(true)
-    val nCandC = time("capped candidates")(candC.count())
-    val pairsC = time("capped verify")(verify(candC).localCheckpoint(true))
-    println(s"PROF   capped: cands=$nCandC pairs=${pairsC.count()} " +
-      s"planted_kept=${plantedKept(pairsC)}/$planted")
-    // uncapped form (q108's shape on the planted corpus)
-    val bands = bandKeysOf(sig, passthru = Seq("sz", "hl"))
-    val candU = bands.as("a").join(bands.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct().localCheckpoint(true)
-    val nCandU = time("uncapped candidates")(candU.count())
-    val pairsU = time("uncapped verify")(verify(candU).localCheckpoint(true))
-    println(s"PROF   uncapped: cands=$nCandU pairs=${pairsU.count()} " +
-      s"planted_kept=${plantedKept(pairsU)}/$planted")
-  }
-
-  /** q131's quality evidence at any SF, engine-side (the wordcap
-    * pattern on the semantic family): capped-vs-uncapped candidate and
-    * verified-pair counts over the SAME planted corpus — exact copies
-    * (vec_id % 7, +100000: must survive) plus a FLOOD (a full
-    * boilerplate mirror of the base corpus at +200000: must be
-    * bounded; sized to cross the 1.5x-mean hot line at every SF). The uncapped form is q118's spill-blocked join; the
-    * capped form is q131's. flood_pairs is the direct read of the
-    * bound: C(flood, 2)-scale uncapped, C(cap, 2)-scale capped. */
-  private def profSemcap(spark: SparkSession, sfDir: String): Unit = {
-    import graft.operators.IvfKmeans
-    import graft.functions.{VectorFunctions => VF}
-    import graft.functions.DedupConfig.HotBucketCap
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val Off = 4000L; val Thresh = 400000L; val Kc = 8
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val anchor = base.orderBy(col("vec_id")).limit(1)
-      .select(col("embedding").as("ae"))
-    val planted = base.filter(col("vec_id") % 7 === 0)
-      .withColumn("vec_id", col("vec_id") + 100000L)
-    val flood = base
-      .crossJoin(broadcast(anchor))
-      .select((col("vec_id") + 200000L).as("vec_id"), col("ae").as("embedding"))
-    val corpus = base.unionByName(planted).unionByName(flood)
-    val e = corpus.select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"),
-        IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .localCheckpoint(true)
-    val nPlanted = planted.count()
-    val floodIds = flood.select(col("vec_id")).localCheckpoint(true)
-    val cents = time("train")(
-      IvfKmeans.train(e.select(col("vec_id"), col("qv")), Kc, 3)
-        .localCheckpoint(true))
-    val spilled = IvfKmeans.rankCells(e, "qv", cents, 2)
-      .select(col("vec_id"), col("v"), col("nrm"), col("qv"), col("cell"))
-      .localCheckpoint(true)
-    def pairStats(kind: String, frame: org.apache.spark.sql.DataFrame,
-                  keys: Seq[String]): Unit = {
-      val a = frame.select(keys.map(col) :+ col("vec_id").as("vec_a"): _*)
-      val b = frame.select(keys.map(col) :+ col("vec_id").as("vec_b"): _*)
-      val cand = time(s"$kind candidates enumerate")(
-        a.join(b, keys).filter(col("vec_a") < col("vec_b"))
-          .select(col("vec_a"), col("vec_b")).distinct()
-          .localCheckpoint(true))
-      val n = time(s"$kind candidates")(cand.count())
-      // the vector side is tiny (corpus rows x 64 doubles); BROADCAST
-      // it so the verify is a map-side pass over the candidate ids.
-      // The first run of this probe let Spark pick SMJ here and the
-      // shuffle of ~3e8 candidate rows each carrying two 64-dim
-      // vectors (~1 KB/row) exhausted the box's spill disk at sf1 —
-      // the exact pathology the capped production path exists to
-      // avoid, but the MEASUREMENT itself must not die of it.
-      val pairs = time(s"$kind verify")(cand
-        .join(broadcast(e.select(col("vec_id").as("vec_a"), col("v").as("va"),
-          col("nrm").as("na"))), "vec_a")
-        .join(broadcast(e.select(col("vec_id").as("vec_b"), col("v").as("vb"),
-          col("nrm").as("nb"))), "vec_b")
-        .withColumn("sim",
-          VF.quantize1e6(VF.dot(col("va"), col("vb")) / (col("na") * col("nb"))))
-        .filter(col("sim") >= Thresh)
-        .select(col("vec_a"), col("vec_b"))
-        .localCheckpoint(true))
-      val np = pairs.count()
-      val kept = pairs.filter(col("vec_b") === col("vec_a") + 100000L &&
-        col("vec_a") % 7 === 0).count()
-      val fp = pairs
-        .join(broadcast(floodIds.select(col("vec_id").as("vec_a"))), "vec_a")
-        .join(broadcast(floodIds.select(col("vec_id").as("vec_b"))), "vec_b")
-        .count()
-      println(s"PROF   $kind: cands=$n pairs=$np " +
-        s"planted_kept=$kept/$nPlanted flood_pairs=$fp")
-    }
-    pairStats("capped",
-      IvfKmeans.capCells(spilled, Kc, HotBucketCap).localCheckpoint(true),
-      Seq("cell", "grp"))
-    pairStats("uncapped", spilled, Seq("cell"))
-  }
-
-  /** q130's quality evidence at any SF: recall@3 of the trained-K
-    * cell-blocked multimodal search against the exact brute-force
-    * top-3 over the FULL probe set (the gate hashes the tuning-sample
-    * numerators; this measures everything), with per-stage walls. The
-    * assignment leg is the r11 `weak` being retired: O(n·K) against
-    * the trained quantizer vs the old O(n·(n/101)) sampled-centroid
-    * scheme — `mm assign` here IS that leg's measured cost. */
-  private def profMmRecall(spark: SparkSession,
-                           docs: org.apache.spark.sql.DataFrame): Unit = {
-    import graft.operators.IvfKmeans
-    import graft.functions.{VectorFunctions => VF}
-    import org.apache.spark.sql.expressions.Window
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val Kc = 16; val Iters = 2
-    val hist = (0 until 8).map(b =>
-      s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
-    val e = time("mm feature extract")(docs
-      .selectExpr("doc_id", "transform(split(text, ''), c -> ascii(c)) AS codes")
-      .selectExpr("doc_id AS vec_id", s"CAST(array($hist) AS array<double>) AS v")
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .withColumn("qv", IvfKmeans.quantize(
-        transform(col("v"), x => x / col("nrm")), 0L))
-      .localCheckpoint(true))
-    val n = e.count()
-    val cents = time("mm train (K=16)")(
-      IvfKmeans.train(e.select(col("vec_id"), col("qv")), Kc, Iters)
-        .localCheckpoint(true))
-    val assign = time("mm assign O(n*K)")(
-      IvfKmeans.rankCells(e, "qv", cents, 1)
-        .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-        .localCheckpoint(true))
-    val q = assign.filter(col("vec_id") % 37 === 0)
-      .select(col("vec_id").as("qid"), col("v").as("pv"),
-        col("nrm").as("pnrm"), col("cell"))
-      .localCheckpoint(true)
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    def top3(cand: org.apache.spark.sql.DataFrame) = cand
-      .withColumn("sim",
-        VF.quantize1e6(VF.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      .select(col("qid"), col("vec_id"))
-    val ivf = time("mm ivf search")(
-      top3(q.join(assign, Seq("cell")).filter(col("vec_id") =!= col("qid")))
-        .localCheckpoint(true))
-    val brute = time("mm brute O(q*n)")(
-      top3(broadcast(q.drop("cell"))
-        .join(e.select(col("vec_id"), col("v"), col("nrm")),
-          col("vec_id") =!= col("qid")))
-        .localCheckpoint(true))
-    val nb = brute.count()
-    val hits = brute.join(ivf, Seq("qid", "vec_id"), "left_semi").count()
-    println(f"PROF   mm corpus=$n probes=${q.count()} recall@3=$hits/$nb " +
-      f"= ${hits.toDouble / nb}%.3f")
-  }
-
-  /** Per-lost-pair diagnosis for q131's cap (the r11 "2855/2856 at
-    * sf1" follow-up): rebuilds the q131 corpus and capCells internals
-    * WITH the diagnostics kept (cell occupancy, hot threshold,
-    * fingerprint-family size, cap-window rank), finds every planted
-    * pair the capped join drops, and prints each lost member's rows —
-    * distinguishing "designed O(m·cap) loss on a >cap copy family"
-    * from a fingerprint-grouping bug. */
-  private def profSemcapDiag(spark: SparkSession, sfDir: String): Unit = {
-    import graft.operators.IvfKmeans
-    import graft.functions.{VectorFunctions => VF, TextFunctions => TF}
-    import graft.functions.DedupConfig.HotBucketCap
-    import org.apache.spark.sql.expressions.Window
-    val Off = 4000L; val Kc = 8
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val anchor = base.orderBy(col("vec_id")).limit(1)
-      .select(col("embedding").as("ae"))
-    val corpus = base
-      .unionByName(base.filter(col("vec_id") % 7 === 0)
-        .withColumn("vec_id", col("vec_id") + 100000L))
-      .unionByName(base.crossJoin(broadcast(anchor))
-        .select((col("vec_id") + 200000L).as("vec_id"), col("ae").as("embedding")))
-    val e = corpus.select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"),
-        IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .localCheckpoint(true)
-    val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), Kc, 3)
-      .localCheckpoint(true)
-    val spilled = IvfKmeans.rankCells(e, "qv", cents, 2)
-      .select(col("vec_id"), col("qv"), col("cell"))
-      .localCheckpoint(true)
-    // capCells' exact arithmetic with occ/fam/rn retained
-    val tot = spilled.agg(count(lit(1)).as("tot"))
-    val diag = spilled.crossJoin(broadcast(tot))
-      .withColumn("occ", count(lit(1)).over(Window.partitionBy(col("cell"))))
-      .withColumn("hthr",
-        greatest(lit(HotBucketCap.toLong), expr(s"(tot * 3) DIV ${2 * Kc}")))
-      .withColumn("sg", aggregate(col("qv"), lit(0L),
-        (a, x) => (a * 31 + x) % TF.HashMod))
-      .withColumn("grp",
-        when(col("occ") > col("hthr"), col("sg")).otherwise(lit(0L)))
-      .withColumn("fam", count(lit(1)).over(
-        Window.partitionBy(col("cell"), col("grp"))))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("cell"), col("grp")).orderBy(col("vec_id"))))
-      .localCheckpoint(true)
-    val capped = diag.filter(col("grp") === 0L || col("rn") <= HotBucketCap)
-    // a planted pair (a, a+100000) survives iff the two ids share a
-    // post-cap (cell, grp); exact copies always pass the cos verify
-    val ka = capped.select(col("cell"), col("grp"), col("vec_id").as("vec_a"))
-    val kb = capped.select(col("cell"), col("grp"), col("vec_id").as("vec_b"))
-    // no id-range test on vec_a: gen_sf corpora key-shift base ids by
-    // 1e6·k, so "base side" means the %7 planting predicate ALONE (the
-    // r11 wordcap lesson, re-learned here — an id-range filter counted
-    // every shifted family as lost on the first run of this diag)
-    val kept = ka.join(kb, Seq("cell", "grp"))
-      .filter(col("vec_a") % 7 === 0 &&
-        col("vec_b") === col("vec_a") + 100000L)
-      .select("vec_a").distinct()
-    val plantedA = base.filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id").as("vec_a"))
-    val lost = plantedA.join(kept, Seq("vec_a"), "left_anti")
-      .localCheckpoint(true)
-    println(s"PROF   planted pairs lost by the cap: ${lost.count()}" +
-      s" of ${plantedA.count()}")
-    val lostIds = lost.select(col("vec_a").as("vec_id"))
-      .unionByName(lost.select((col("vec_a") + 100000L).as("vec_id")))
-    diag.join(broadcast(lostIds), Seq("vec_id"))
-      .select("vec_id", "cell", "occ", "hthr", "grp", "fam", "rn")
-      .orderBy("vec_id", "cell")
-      .collect()
-      .foreach(r => println(s"PROF   lost-member vec_id=${r.getLong(0)} " +
-        s"cell=${r.getLong(1)} occ=${r.getLong(2)} hthr=${r.getLong(3)} " +
-        s"grp=${r.getLong(4)} fam=${r.getLong(5)} rn=${r.getInt(6)}"))
-  }
-
-  /** Per-stage attribution of q128_semantic_drift_retrain — the r12
-    * steady-bench mover (5.40 -> 7.95 s judge-steady on an engine path
-    * r12 did not touch; VERDICT r12 task 7). Mirrors the gate's
-    * lifecycle stage by stage through the SAME SemanticIndex/IvfKmeans
-    * operators, each stage forced in isolation, so the drift names a
-    * STAGE, not a query. */
-  private def profSemDrift(spark: SparkSession, sfDir: String): Unit = {
-    import graft.operators.{IvfKmeans, SemanticIndex}
-    import graft.functions.{VectorFunctions => VF}
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val Off = 4000L; val Thresh = 400000L
-    val root = s"${graft.queries.Fixtures.scratchRoot}/profsemdrift"
-    val tbl = "graft_prof_semdrift"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    graft.queries.Fixtures.rmrf(new java.io.File(root))
-    val e = time("q128 vec prep")(
-      spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-          IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-        .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        .localCheckpoint(true))
-    val seed = e.filter(col("vec_id") % 2 === 0)
-    val cents0 = time("q128 train seed cents")(
-      IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-        .localCheckpoint(true))
-    val nb = graft.functions.DedupConfig.IndexBuckets
-    val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents0,
-      nb, Thresh)
-    time("q128 writeEpoch0")(SemanticIndex.writeEpoch0(h, seed))
-    def skew(): (Long, Long, Long) = {
-      val r = spark.table(tbl).groupBy(col("cell"))
-        .agg(count(lit(1)).as("n"))
-        .agg(max(col("n")), sum(col("n")), count(lit(1))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    val w1 = e.filter(col("vec_id") % 20 === 1)
-      .withColumn("vec_id", col("vec_id") + 100000L)
-    val a1 = time("q128 wave1 accept")(SemanticIndex.acceptWave(h, w1))
-    time("q128 wave1 commit")(SemanticIndex.commit(h, a1, 1, nb))
-    time("q128 skew read 1")(skew())
-    val anchor = e.filter(col("vec_id") % 20 === 3)
-      .orderBy(col("vec_id")).limit(1).select(col("v").as("av"))
-    val w2 = e.filter(col("vec_id") % 4 === 3)
-      .crossJoin(broadcast(anchor))
-      .withColumn("v", zip_with(col("v"), col("av"),
-        (x, a) => x + a * lit(5)))
-      .withColumn("qv", transform(col("v"),
-        x => floor(x * 1000).cast("long") + lit(Off)))
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .withColumn("vec_id", col("vec_id") + 200000L)
-      .select("vec_id", "v", "qv", "nrm")
-    val a2 = time("q128 wave2 accept")(SemanticIndex.acceptWave(h, w2))
-    time("q128 wave2 commit")(SemanticIndex.commit(h, a2, 2, nb))
-    time("q128 skew read 2")(skew())
-    val h2 = time("q128 retrainReassign")(
-      SemanticIndex.retrainReassign(h, Off, 8, 3, nb * 2))
-    time("q128 skew read 3")(skew())
-    val w3 = e.filter(col("vec_id") % 20 === 11)
-      .withColumn("vec_id", col("vec_id") + 300000L)
-    val a3 = time("q128 wave3 accept")(SemanticIndex.acceptWave(h2, w3))
-    time("q128 wave3 commit")(SemanticIndex.commit(h2, a3, 3, nb * 2))
-    time("q128 rollup")(SemanticIndex.rollup(h2).collect())
-  }
-
-  /** Per-stage attribution of the q133/q136 multimodal-lifecycle cost
-    * (14.5 s / 13.0 s steady at sf0.1 — the two most expensive bench
-    * rows after r13). Mirrors q133's build+ingest lifecycle plus
-    * q136's compact/retract legs through the SAME operators, each
-    * stage forced in isolation, so "where do 27 s go" names stages:
-    * the char-level byte-histogram feature extraction over the full
-    * corpus, the Lloyd chain, the bucketed store writes, and the
-    * per-wave accept joins — not a mystery total. */
-  private def profMmLife(spark: SparkSession, sfDir: String): Unit = {
-    import graft.operators.{IvfKmeans, SemanticIndex}
-    import graft.functions.{VectorFunctions => VF}
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val Thresh = 900000L
-    val root = s"${graft.queries.Fixtures.scratchRoot}/profmmlife"
-    val tbl = "graft_prof_mmlife"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    graft.queries.Fixtures.rmrf(new java.io.File(root))
-    val hist = (0 until 8).map(b =>
-      s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
-    def feats(src: org.apache.spark.sql.DataFrame) = src
-      .selectExpr("vec_id", "transform(split(txt, ''), c -> ascii(c)) AS codes")
-      .selectExpr("vec_id", s"CAST(array($hist) AS array<double>) AS v")
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .withColumn("qv", IvfKmeans.quantize(
-        transform(col("v"), x => x / col("nrm")), 0L))
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val seed = time("mm feats(corpus)+ckpt")(
-      feats(d.select(col("doc_id").as("vec_id"), col("text").as("txt")))
-        .localCheckpoint(true))
-    val cents = time("mm train K=8 iters=2")(
-      IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 2)
-        .localCheckpoint(true))
-    val nb = graft.functions.DedupConfig.IndexBuckets
-    val h = SemanticIndex.Handle(spark, tbl, s"$root/idx", cents, nb, Thresh)
-    time("mm writeEpoch0 (bucketed)")(SemanticIndex.writeEpoch0(h, seed))
-    val w1 = feats(
-      d.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 100000L).as("vec_id"), col("text").as("txt"))
-      .unionByName(d.filter(col("doc_id") % 5 === 1)
-        .select((col("doc_id") + 200000L).as("vec_id"),
-          upper(col("text")).as("txt"))))
-    val acc1 = time("mm wave1 accept (feats+join)")(SemanticIndex.acceptWave(h, w1))
-    val copy1 = d.filter(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + 100000L).as("vec_id"))
-    time("mm wave1 stratum counts")({
-      acc1.join(copy1, Seq("vec_id"), "left_semi").count()
-      acc1.count()
-    })
-    time("mm wave1 commit")(SemanticIndex.commit(h, acc1, 1, nb))
-    time("mm compact nb->2nb")(
-      graft.sources.Bucketed.compact(spark, tbl, nb * 2, Seq("cell"), h.path))
-    time("mm retract epoch-1 set")(
-      SemanticIndex.retract(h, acc1.select("vec_id"), nb * 2))
-    val w2 = feats(
-      d.filter(col("doc_id") % 4 === 2)
-        .select((col("doc_id") + 400000L).as("vec_id"), col("text").as("txt"))
-      .unionByName(d.filter(col("doc_id") % 5 === 1)
-        .select((col("doc_id") + 500000L).as("vec_id"),
-          upper(col("text")).as("txt"))))
-    val acc2 = time("mm wave2 accept (feats+join)")(SemanticIndex.acceptWave(h, w2))
-    // timing-only probe counts: the +500000 frame is the wave-2
-    // RE-SENT copies (not the retracted epoch-1 set acc1); the gate's
-    // require assertions live in q136, this mirrors its cost shape
-    time("mm wave2 probe counts")({
-      val resent = d.filter(col("doc_id") % 5 === 1)
-        .select((col("doc_id") + 500000L).as("vec_id")).localCheckpoint(true)
-      resent.count()
-      acc2.join(resent, Seq("vec_id"), "left_semi").count()
-    })
-    time("mm wave2 commit")(SemanticIndex.commit(h, acc2, 2, nb * 2))
-    time("mm rollup")(SemanticIndex.rollup(h).collect())
-  }
-
-  /** Per-stage attribution of the q110 epoch-compaction lifecycle —
-    * the one >0.9 s r11→r13 steady-bench mover (4.81 → 5.78 s,
-    * VERDICT r13 item 4). Mirrors q110's exact stage sequence (seed
-    * index writes, wave-1 accept+commit, BOTH table compactions at
-    * the barrier, wave-2 accept at the doubled bucket count, commit,
-    * rollup) with count/collect barriers per stage so the drift names
-    * a stage, not a query. */
-  private def profCompactLife(spark: SparkSession, sfDir: String): Unit = {
-    import graft.functions.MinhashPipeline.{signedDocs, bandKeysOf, acceptAgainstIndex}
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val root = s"${graft.queries.Fixtures.scratchRoot}/profcompact"
-    val docPath = s"$root/idx_docs"; val bandPath = s"$root/idx_bands"
-    val docTable = "graft_profcl_docs"; val bandTable = "graft_profcl_bands"
-    spark.sql(s"DROP TABLE IF EXISTS $docTable")
-    spark.sql(s"DROP TABLE IF EXISTS $bandTable")
-    graft.queries.Fixtures.rmrf(new java.io.File(root))
-    val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
-      .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-      .select("doc_id", "lang", "text")
-    val nb = graft.functions.DedupConfig.IndexBuckets
-    val seed = time("cl seed sign+ckpt")(signedDocs(corpus).localCheckpoint(true))
-    time("cl seed write docs")(graft.sources.Bucketed.writeBucketed(
-      seed.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-        .withColumn("epoch", lit(0)),
-      docTable, nb, Seq("doc_id"), path = Some(docPath)))
-    time("cl seed write bands")(graft.sources.Bucketed.writeBucketed(
-      bandKeysOf(seed), bandTable, nb, Seq("bkey"), path = Some(bandPath)))
-    def commit(epoch: Int, acc: org.apache.spark.sql.DataFrame, b: Int): Unit = {
-      graft.sources.Bucketed.writeBucketed(
-        acc.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-          .withColumn("epoch", lit(epoch)),
-        docTable, b, Seq("doc_id"), mode = "append", path = Some(docPath))
-      graft.sources.Bucketed.writeBucketed(bandKeysOf(acc),
-        bandTable, b, Seq("bkey"), mode = "append", path = Some(bandPath))
-      spark.catalog.refreshByPath(docPath)
-      spark.catalog.refreshByPath(bandPath)
-    }
-    val w1 = corpus.filter(col("doc_id") % 20 === 0)
-      .withColumn("doc_id", col("doc_id") + 200000L)
-      .unionByName(corpus.filter(col("doc_id") % 20 === 4)
-        .withColumn("doc_id", col("doc_id") + 300000L)
-        .withColumn("text", reverse(col("text"))))
-    val w2 = corpus.filter(col("doc_id") % 20 === 4)
-      .withColumn("doc_id", col("doc_id") + 400000L)
-      .withColumn("text", reverse(col("text")))
-      .unionByName(corpus.filter(col("doc_id") % 20 === 8)
-        .withColumn("doc_id", col("doc_id") + 500000L)
-        .withColumn("text", reverse(col("text"))))
-    val s1 = time("cl wave1 sign+ckpt")(signedDocs(w1).localCheckpoint(true))
-    val acc1 = time("cl wave1 accept+ckpt")(
-      acceptAgainstIndex(s1, docTable, bandTable).localCheckpoint(true))
-    time("cl wave1 commit")(commit(1, acc1, nb))
-    time("cl compact docs nb->2nb")(
-      graft.sources.Bucketed.compact(spark, docTable, nb * 2, Seq("doc_id"), docPath))
-    time("cl compact bands nb->2nb")(
-      graft.sources.Bucketed.compact(spark, bandTable, nb * 2, Seq("bkey"), bandPath))
-    val s2 = time("cl wave2 sign+ckpt")(signedDocs(w2).localCheckpoint(true))
-    val acc2 = time("cl wave2 accept+ckpt")(
-      acceptAgainstIndex(s2, docTable, bandTable).localCheckpoint(true))
-    time("cl wave2 commit")(commit(2, acc2, nb * 2))
-    time("cl rollup")(spark.table(docTable)
-      .groupBy(col("epoch"), col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("sz")).as("sum_sz"),
-        sum(col("doc_id")).as("sum_id"))
-      .orderBy(col("epoch"), col("lang")).collect())
-  }
-
-  /** Attribution of q109_stream_dedup's wall (VERDICT r15 item 3).
-    * Replicates q109's exact lifecycle — seed index, wave-1 stream,
-    * epoch-1 commit, commit-level retry, checkpoint-wipe replay
-    * stream, wave-2 stream, epoch-2 commit, rollup — with a wall
-    * timer per phase AND an in-batch work clock (accumulated inside
-    * foreachBatch), so each stream's wall splits into
-    * `batch work` + `SS machinery` (query start, micro-batch
-    * scheduling, offset/commit log writes, stop). A no-op stream over
-    * the same 4-file source (foreachBatch = count only) is the floor:
-    * what AvailableNow costs with near-zero work. q109 runs THREE
-    * lifecycles by design (wave 1, the replay-safety leg, wave 2) —
-    * if machinery dominates, the fix is fewer/cheaper lifecycles; if
-    * work dominates, the cost is the dedup itself and stands. */
-  private def profStreamLife(spark: SparkSession, sfDir: String): Unit = {
-    import graft.functions.MinhashPipeline.{signedDocs, bandKeysOf, acceptAgainstIndex}
-    import org.apache.spark.sql.streaming.Trigger
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val root = s"${graft.queries.Fixtures.scratchRoot}/profstream"
-    val docPath = s"$root/idx_docs"; val bandPath = s"$root/idx_bands"
-    val docTable = "graft_profsl_docs"; val bandTable = "graft_profsl_bands"
-    spark.sql(s"DROP TABLE IF EXISTS $docTable")
-    spark.sql(s"DROP TABLE IF EXISTS $bandTable")
-    graft.queries.Fixtures.rmrf(new java.io.File(root))
-    val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
-      .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-      .select("doc_id", "lang", "text")
-    val nb = graft.functions.DedupConfig.IndexBuckets
-    val seed = time("sl seed sign+ckpt")(signedDocs(corpus).localCheckpoint(true))
-    time("sl seed write idx")({
-      graft.sources.Bucketed.writeBucketed(
-        seed.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-          .withColumn("epoch", lit(0)),
-        docTable, nb, Seq("doc_id"), path = Some(docPath))
-      graft.sources.Bucketed.writeBucketed(bandKeysOf(seed),
-        bandTable, nb, Seq("bkey"), path = Some(bandPath))
-    })
-    val w1 = corpus.filter(col("doc_id") % 20 === 0)
-      .withColumn("doc_id", col("doc_id") + 200000L)
-      .unionByName(corpus.filter(col("doc_id") % 20 === 4)
-        .withColumn("doc_id", col("doc_id") + 300000L)
-        .withColumn("text", reverse(col("text"))))
-    val w2 = corpus.filter(col("doc_id") % 20 === 4)
-      .withColumn("doc_id", col("doc_id") + 400000L)
-      .withColumn("text", reverse(col("text")))
-      .unionByName(corpus.filter(col("doc_id") % 20 === 8)
-        .withColumn("doc_id", col("doc_id") + 500000L)
-        .withColumn("text", reverse(col("text"))))
-    time("sl wave file writes")({
-      w1.repartition(4).write.mode("overwrite").parquet(s"$root/src1")
-      w2.repartition(4).write.mode("overwrite").parquet(s"$root/src2")
-    })
-    val srcSchema = spark.read.parquet(s"$root/src1").schema
-    val stagedSchema = signedDocs(corpus.limit(0)).schema
-    // in-batch work clock: foreachBatch adds its own wall here, so
-    // stream wall - batchWork = the SS machinery share
-    val batchWork = new java.util.concurrent.atomic.AtomicLong(0L)
-    def runStream(tag: String, epoch: Int, srcPath: String): Unit = {
-      batchWork.set(0L)
-      time(s"sl stream $tag wall") {
-        val q = spark.readStream.schema(srcSchema)
-          .option("maxFilesPerTrigger", 2).parquet(srcPath)
-          .writeStream
-          .option("checkpointLocation", s"$root/ckpt_$epoch")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            val b0 = System.nanoTime()
-            val bs = signedDocs(batch).localCheckpoint(true)
-            acceptAgainstIndex(bs, docTable, bandTable)
-              .select(col("doc_id"), col("lang"), col("hl"), col("sz"), col("sig"))
-              .write.mode("overwrite").parquet(s"$root/stage_$epoch/batch=$batchId")
-            batchWork.addAndGet(System.nanoTime() - b0); ()
-          }
-          .start()
-        q.awaitTermination()
-      }
-      println(f"PROF ${s"sl stream $tag work"}%-28s ${batchWork.get / 1e9}%8.2f s" +
-        "   (wall - work = SS machinery)")
-    }
-    def commitEpoch(name: String, epoch: Int): Long = time(s"sl commit $name") {
-      val stageDir = new org.apache.hadoop.fs.Path(s"$root/stage_$epoch")
-      val sfs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val batchDirs =
-        if (!sfs.exists(stageDir)) Array.empty[String]
-        else sfs.listStatus(stageDir)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-          .map(_.getPath.toString).sorted
-      val staged =
-        if (batchDirs.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stagedSchema)
-        else spark.read.schema(stagedSchema).parquet(batchDirs.toIndexedSeq: _*)
-      val novel = staged
-        .join(spark.table(docTable).select("doc_id"), Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
-      graft.sources.Bucketed.writeBucketed(bandKeysOf(novel),
-        bandTable, nb, Seq("bkey"), mode = "append", path = Some(bandPath))
-      graft.sources.Bucketed.writeBucketed(
-        novel.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-          .withColumn("epoch", lit(epoch)),
-        docTable, nb, Seq("doc_id"), mode = "append", path = Some(docPath))
-      spark.catalog.refreshByPath(docPath)
-      spark.catalog.refreshByPath(bandPath)
-      novel.count()
-    }
-    // ---- floor control: the same source + trigger + checkpoint shape
-    // with a count-only foreachBatch — prices pure SS machinery
-    time("sl NOOP stream (control)")({
-      val q = spark.readStream.schema(srcSchema)
-        .option("maxFilesPerTrigger", 2).parquet(s"$root/src1")
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt_noop")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.count(); ()
-        }
-        .start()
-      q.awaitTermination()
-    })
-    runStream("wave1", 1, s"$root/src1")
-    commitEpoch("epoch1", 1)
-    commitEpoch("retry (no-op)", 1)
-    time("sl ckpt wipe")(
-      graft.queries.Fixtures.rmrf(new java.io.File(s"$root/ckpt_1")))
-    runStream("replay", 1, s"$root/src1")
-    commitEpoch("replay (no-op)", 1)
-    runStream("wave2", 2, s"$root/src2")
-    commitEpoch("epoch2", 2)
-    time("sl rollup")(spark.table(docTable)
-      .groupBy(col("epoch"), col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("sz")).as("sum_sz"),
-        sum(col("doc_id")).as("sum_id"))
-      .orderBy(col("epoch"), col("lang")).collect())
-  }
-
-  /** The q131 scaling follow-up (r16): [[graft.operators.IvfKmeans
-    * .cappedSpillPairs]] on q131's exact corpus at the gate's pinned
-    * K=8 vs the q134 occupancy-discipline K (smallest K holding mean
-    * 2-probe occupancy <= OccBudget=96, the hand-off COVERAGE
-    * documents). The r16 study measured the pinned-K gate at
-    * wall ∝ scale^~2 (sf1 -> sf10): capCells leaves COLD cells
-    * uncapped — their pair cost is the 1.5×-mean occupancy line, and
-    * at FIXED K the mean grows ∝ n, so cold-cell enumeration is
-    * (n/K)²·K. The production path holds occupancy constant by
-    * GROWING K (the q134 hand-off), which this run demonstrates
-    * engine-only. Training uses a deterministic 1-in-20 sample (the
-    * production IVF discipline; the gate trains on the full corpus
-    * only because gate scale is tiny). */
-  private def profSemScale(spark: SparkSession, sfDir: String): Unit = {
-    import graft.operators.IvfKmeans
-    import graft.functions.DedupConfig.HotBucketCap
-    import graft.functions.{VectorFunctions => VF}
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val Off = 4000L; val Thresh = 400000L; val OccBudget = 96L
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val anchor = base.orderBy(col("vec_id")).limit(1)
-      .select(col("embedding").as("ae"))
-    val corpus = base
-      .unionByName(base.filter(col("vec_id") % 7 === 0)
-        .withColumn("vec_id", col("vec_id") + 100000L))
-      .unionByName(base.crossJoin(broadcast(anchor))
-        .select((col("vec_id") + 200000L).as("vec_id"),
-          col("ae").as("embedding")))
-    val e = corpus.select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"),
-        IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .localCheckpoint(true)
-    val n = e.count()
-    // q134's discipline: 2-probe spill rows / K <= OccBudget
-    val kMeasured = math.max(8L, 2L * n / OccBudget).toInt
-    println(s"PROF semscale corpus n=$n  pinned K=8  measured K=$kMeasured")
-    // arm selection: the pinned-K arm is quadratic BY DESIGN at sf10
-    // (that is the finding) — if a run of it must be abandoned for
-    // wall-clock, SPARK_GRAFT_SEMSCALE_KS=measured reruns just the
-    // linear arm ("8"/"measured"/explicit ints, comma-separated)
-    val arms = sys.env.get("SPARK_GRAFT_SEMSCALE_KS")
-      .map(_.split(",").toSeq.map {
-        case "measured" => kMeasured
-        case "8"        => 8
-        case s          => s.trim.toInt
-      })
-      .getOrElse(Seq(8, kMeasured))
-    arms.foreach { k =>
-      val cents = time(s"semscale train K=$k")(
-        IvfKmeans.train(e.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id"), col("qv")), k, 3).localCheckpoint(true))
-      val pairs = time(s"semscale pairs K=$k")(
-        IvfKmeans.cappedSpillPairs(e, cents, Thresh, k, HotBucketCap).count())
-      println(s"PROF semscale K=$k verified pairs=$pairs")
-    }
-  }
-
-  /** Per-stage attribution for q58_multimodal_embed and
-    * q52_dedup_clusters — the two engine-only sf1 rows VERDICT r10
-    * listed as recorded-but-unexplained. Each stage is forced in
-    * isolation (count/localCheckpoint barriers) so the dominant cost
-    * is a measured fact, not an inference: q58 splits decode/feature
-    * extraction (linear) from the brute-force O(q·n) score+top-k leg
-    * (the deliberate baseline; production path = IVF/LSH blocking);
-    * q52 splits shingle+bitmap build (linear) from the lang-blocked
-    * all-pairs verify (the deliberate exact baseline; production
-    * path = q88's banded pipeline) from the component iterations. */
-  private def profAttrib(spark: SparkSession,
-                         docs: org.apache.spark.sql.DataFrame): Unit = {
-    import graft.functions.{VectorFunctions => VF}
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    // ---- q58: decode/feature-extract vs brute-force top-k
-    val hist = (0 until 8).map(b =>
-      s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
-    val e58 = time("q58 feature extract")(docs
-      .selectExpr("doc_id",
-        "transform(split(text, ''), c -> ascii(c)) AS codes")
-      .selectExpr("doc_id", s"CAST(array($hist) AS array<double>) AS v")
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .localCheckpoint(true))
-    val q58 = e58.filter(col("doc_id") % 37 === 0)
-      .select(col("doc_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val scored = broadcast(q58).join(e58, col("doc_id") =!= col("qid"))
-      .withColumn("sim_x1e6",
-        VF.quantize1e6(VF.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))))
-    time("q58 brute score O(q*n)")(
-      println(s"PROF   q58 scored rows: ${scored.count()}"))
-    val w58 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("sim_x1e6").desc, col("doc_id"))
-    time("q58 top-k window")(
-      scored.withColumn("rn", row_number().over(w58))
-        .filter(col("rn") <= 3).count())
-
-    // ---- q52: bitmap build vs all-pairs verify vs components
-    val sh52 = docs.select(col("doc_id"), col("lang"),
-      TF.shingles(col("text"), 3).as("sh"))
-    val bm = time("q52 shingle+bitmap build")(
-      graft.operators.SetSimJoin.withBitmap(sh52, "doc_id", "sh")
-        .select(col("doc_id"), col("lang"), col("sz"), col("bm"))
-        .localCheckpoint(true))
-    val pairs52 = bm.as("a").join(broadcast(bm.as("b")),
-        col("a.lang") === col("b.lang") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          sizeRatioOk(col("a.sz"), col("b.sz")))
-      .withColumn("jacc_x1000", graft.operators.SetSimJoin.jaccardX1000(
-        col("a.bm"), col("b.bm"), col("a.sz"), col("b.sz")))
-      .filter(col("jacc_x1000") >= JaccThreshold)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val edges = time("q52 all-pairs verify")(pairs52.localCheckpoint(true))
-    println(s"PROF   q52 edge rows: ${edges.count()}")
-    time("q52 connected components")(
-      graft.operators.ConnectedComponents.components(edges, "doc_a", "doc_b")
-        .count())
+  private def time[A](name: String)(f: => A): A = {
+    val t0 = System.nanoTime()
+    val r = f
+    println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
+    r
   }
 
   /** Candidate-stage counts for the dedup-family gates that compose
@@ -1004,13 +43,6 @@ object Prof {
     * family, not just q41/q92. Counts only; no fixture writes. */
   private def profFamily(spark: SparkSession,
                          docs: org.apache.spark.sql.DataFrame): Unit = {
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-
     // ---- q88: band collisions over exact-dedup survivors
     val d = docs.select(col("doc_id"), col("lang"), col("text"))
     val raw = d.unionByName(d.filter(col("doc_id") % 7 === 0)
@@ -1112,5 +144,63 @@ object Prof {
     println(s"PROF   q104 test grams: $nTest, bloom survivors: $nCand, " +
       s"true hits: $nTrue, false-positive rate: " +
       f"${if (nTest == nTrue) 0.0 else (nCand - nTrue).toDouble / (nTest - nTrue)}%.4f")
+  }
+
+  /** The q131 scaling follow-up (r16): [[graft.operators.IvfKmeans
+    * .cappedSpillPairs]] on q131's exact corpus at the gate's pinned
+    * K=8 vs the q134 occupancy-discipline K (smallest K holding mean
+    * 2-probe occupancy <= OccBudget=96, the hand-off COVERAGE
+    * documents). The r16 study measured the pinned-K gate at
+    * wall ∝ scale^~2 (sf1 -> sf10): capCells leaves COLD cells
+    * uncapped — their pair cost is the 1.5×-mean occupancy line, and
+    * at FIXED K the mean grows ∝ n, so cold-cell enumeration is
+    * (n/K)²·K. The production path holds occupancy constant by
+    * GROWING K (the q134 hand-off), which this run demonstrates
+    * engine-only. Training uses a deterministic 1-in-20 sample (the
+    * production IVF discipline; the gate trains on the full corpus
+    * only because gate scale is tiny). */
+  private def profSemScale(spark: SparkSession, sfDir: String): Unit = {
+    import graft.operators.IvfKmeans
+    import graft.functions.DedupConfig.HotBucketCap
+    import graft.functions.{VectorFunctions => VF}
+    val Off = 4000L; val Thresh = 400000L; val OccBudget = 96L
+    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val anchor = base.orderBy(col("vec_id")).limit(1)
+      .select(col("embedding").as("ae"))
+    val corpus = base
+      .unionByName(base.filter(col("vec_id") % 7 === 0)
+        .withColumn("vec_id", col("vec_id") + 100000L))
+      .unionByName(base.crossJoin(broadcast(anchor))
+        .select((col("vec_id") + 200000L).as("vec_id"),
+          col("ae").as("embedding")))
+    val e = corpus.select(col("vec_id"),
+        VF.asDouble(col("embedding")).as("v"),
+        IvfKmeans.quantize(col("embedding"), Off).as("qv"))
+      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+      .localCheckpoint(true)
+    val n = e.count()
+    // q134's discipline: 2-probe spill rows / K <= OccBudget
+    val kMeasured = math.max(8L, 2L * n / OccBudget).toInt
+    println(s"PROF semscale corpus n=$n  pinned K=8  measured K=$kMeasured")
+    // arm selection: the pinned-K arm is quadratic BY DESIGN at sf10
+    // (that is the finding) — if a run of it must be abandoned for
+    // wall-clock, SPARK_GRAFT_SEMSCALE_KS=measured reruns just the
+    // linear arm ("8"/"measured"/explicit ints, comma-separated)
+    val arms = sys.env.get("SPARK_GRAFT_SEMSCALE_KS")
+      .map(_.split(",").toSeq.map {
+        case "measured" => kMeasured
+        case "8"        => 8
+        case s          => s.trim.toInt
+      })
+      .getOrElse(Seq(8, kMeasured))
+    arms.foreach { k =>
+      val cents = time(s"semscale train K=$k")(
+        IvfKmeans.train(e.filter(col("vec_id") % 20 === 0)
+          .select(col("vec_id"), col("qv")), k, 3).localCheckpoint(true))
+      val pairs = time(s"semscale pairs K=$k")(
+        IvfKmeans.cappedSpillPairs(e, cents, Thresh, k, HotBucketCap).count())
+      println(s"PROF semscale K=$k verified pairs=$pairs")
+    }
   }
 }

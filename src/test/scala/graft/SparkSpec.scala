@@ -6,17 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM-wide session keeps
   * the suite runtime dominated by actual query work, not startup). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new graft.plans.GraftExtensions)
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    // subset co-partitioning — see Bench.scala: keeps bucketed stores
-    // exchange-free under composite-key probe joins
-    .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -6,7 +6,10 @@ Usage: python3 tools/bench_diff.py OLD.json NEW.json [threshold_s]
 
 Prints shared-query regressions/improvements over the threshold, the
 new-query cost, and totals. Loadavg arrays (when present) are shown for
-regressed queries so box contention is visible in place.
+regressed queries so box contention is visible in place. Each side's
+failed queries are listed; a total leaves them out, so two totals are
+not comparable when either side has failures (detail files written
+before the `failed` field count as 0 failures).
 """
 import json
 import sys
@@ -24,6 +27,12 @@ def main():
     drift = sorted(((nq[q] - oq[q], q) for q in shared), reverse=True)
     print(f"old total {old['value']:.1f}s/{len(oq)}q   "
           f"new total {new['value']:.1f}s/{len(nq)}q")
+    for side, d in (("old", old), ("new", new)):
+        names = d.get("failed_queries", [])
+        print(f"{side} failed: {d.get('failed', 0)}"
+              + (f" {', '.join(names)}" if names else ""))
+    if old.get("failed", 0) or new.get("failed", 0):
+        print("totals are NOT comparable: failed queries are left out of them")
     shared_old = sum(oq[q] for q in shared)
     shared_new = sum(nq[q] for q in shared)
     print(f"shared-query subtotal: {shared_old:.1f}s -> {shared_new:.1f}s "
