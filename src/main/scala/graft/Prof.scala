@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
+import graft.queries.QueriesLlm
 import graft.functions.DedupConfig.{K, Bands, Rpb, JaccThreshold, sizeRatioOk}
 
 /** Stage-level profiler for perf work on the dedup family, one mode
@@ -70,46 +71,16 @@ object Prof {
     val ver88 = cand88.filter(graft.operators.SetSimJoin.jaccardX1000(
       col("a.bm"), col("b.bm"), col("a.sz"), col("b.sz")) >= JaccThreshold)
     time("q88 verify")(println(s"PROF   q88 verified pairs: ${ver88.count()}"))
-    // r17 (VERDICT r16 item 6): is a distinct-before-verify worth it?
-    // Each (a, b) pair colliding in k of the 4 bands pays the bitmap
-    // popcount k times in the inline form; distinct-first pays one
-    // shuffle of the skinny pair stream instead. Numbers decide.
-    val candSkinny = bands88.select(col("doc_id"), col("band_idx"),
-        col("band_key"), col("sz")).as("a")
-      .join(bands88.select(col("doc_id"), col("band_idx"),
-        col("band_key"), col("sz")).as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          sizeRatioOk(col("a.sz"), col("b.sz")))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val cd88 = time("q88 skinny enum+distinct")(
-      candSkinny.distinct().localCheckpoint(true))
-    println(s"PROF   q88 distinct pairs: ${cd88.count()}")
-    val ver88d = cd88
-      .join(broadcast(sig88.select(col("doc_id").as("doc_a"),
-        col("bm").as("bm_a"), col("sz").as("sz_a"))), "doc_a")
-      .join(broadcast(sig88.select(col("doc_id").as("doc_b"),
-        col("bm").as("bm_b"), col("sz").as("sz_b"))), "doc_b")
-      .filter(graft.operators.SetSimJoin.jaccardX1000(
-        col("bm_a"), col("bm_b"), col("sz_a"), col("sz_b")) >= JaccThreshold)
-    time("q88 verify distinct-first")(
-      println(s"PROF   q88 verified (distinct-first): ${ver88d.count()}"))
     sig88.agg(count(lit(1)), avg(size(col("bm"))), max(size(col("bm"))),
         avg(col("sz")), max(col("sz"))).show()
 
-    // ---- q99: distinct (wave, index) band-bucket hits — the
-    // signing/banding is the gates' own shared front end, so the
-    // profiled stage can never drift from what q99/q109/q110 run
+    // ---- q99: distinct (wave, index) band-bucket hits — the corpus,
+    // wave and signing/banding are the gates' own shared definitions,
+    // so the profiled stage can never drift from what q99/q109/q110 run
     import graft.functions.MinhashPipeline.{signedDocs => signed, bandKeysOf => bandsOf}
-    val corpus99 = docs.filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-      .select("doc_id", "lang", "text")
-    val wave99 = corpus99.filter(col("doc_id") % 20 === 0)
-      .withColumn("doc_id", col("doc_id") + 200000L)
-      .unionByName(corpus99.filter(col("doc_id") % 20 === 4)
-        .withColumn("doc_id", col("doc_id") + 300000L)
-        .withColumn("text", reverse(col("text"))))
-    val cand99 = bandsOf(signed(wave99)).withColumnRenamed("doc_id", "w_id")
+    val corpus99 = QueriesLlm.textCorpus(docs)
+    val cand99 = bandsOf(signed(QueriesLlm.textWaves(corpus99)._1))
+      .withColumnRenamed("doc_id", "w_id")
       .join(bandsOf(signed(corpus99)), "bkey")
       .select(col("w_id"), col("doc_id").as("idx_id"))
       .distinct()
@@ -162,22 +133,11 @@ object Prof {
   private def profSemScale(spark: SparkSession, sfDir: String): Unit = {
     import graft.operators.IvfKmeans
     import graft.functions.DedupConfig.HotBucketCap
-    import graft.functions.{VectorFunctions => VF}
-    val Off = 4000L; val Thresh = 400000L; val OccBudget = 96L
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val anchor = base.orderBy(col("vec_id")).limit(1)
-      .select(col("embedding").as("ae"))
-    val corpus = base
-      .unionByName(base.filter(col("vec_id") % 7 === 0)
-        .withColumn("vec_id", col("vec_id") + 100000L))
-      .unionByName(base.crossJoin(broadcast(anchor))
-        .select((col("vec_id") + 200000L).as("vec_id"),
-          col("ae").as("embedding")))
-    val e = corpus.select(col("vec_id"),
-        VF.asDouble(col("embedding")).as("v"),
-        IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+    val OccBudget = 96L
+    // q131's corpus and embedding frame, from the gate's own helpers
+    val e = QueriesLlm.semFrame(QueriesLlm.hotCellCorpus(
+        spark.read.parquet(s"$sfDir/embeddings.parquet")
+          .select(col("vec_id"), col("embedding"))))
       .localCheckpoint(true)
     val n = e.count()
     // q134's discipline: 2-probe spill rows / K <= OccBudget
@@ -199,7 +159,8 @@ object Prof {
         IvfKmeans.train(e.filter(col("vec_id") % 20 === 0)
           .select(col("vec_id"), col("qv")), k, 3).localCheckpoint(true))
       val pairs = time(s"semscale pairs K=$k")(
-        IvfKmeans.cappedSpillPairs(e, cents, Thresh, k, HotBucketCap).count())
+        IvfKmeans.cappedSpillPairs(e, cents, QueriesLlm.SemThresh, k,
+          HotBucketCap).count())
       println(s"PROF semscale K=$k verified pairs=$pairs")
     }
   }

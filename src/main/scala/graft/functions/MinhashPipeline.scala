@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
 import graft.functions.DedupConfig.{K, Bands, Rpb, JaccThreshold, sizeRatioOk}
+import graft.operators.MinhashIndex
 
 /** The shared front end of the persistent-index MinHash dedup family —
   * q99's batch index, q108's production-granularity self-join, and
@@ -231,14 +232,12 @@ object MinhashPipeline {
     * materialized by the caller (localCheckpoint) — it feeds both the
     * banding and the verify join here, plus whatever the caller does
     * with the result. */
-  def verifiedDupPairs(wsig: DataFrame, docTable: String,
-                       bandTable: String): DataFrame = {
-    val ss = wsig.sparkSession
+  def verifiedDupPairs(wsig: DataFrame, h: MinhashIndex.Handle): DataFrame = {
     val cand = bandKeysOf(wsig).withColumnRenamed("doc_id", "w_id")
-      .join(ss.table(bandTable), "bkey") // index side exchange-free
+      .join(h.spark.table(h.bandTable), "bkey") // index side exchange-free
       .select(col("w_id"), col("doc_id").as("idx_id"))
       .distinct()
-    verifyPairs(cand, wsig, docTable)
+    verifyPairs(cand, wsig, h.docTable)
   }
 
   /** The exact-Jaccard verify tail shared by [[verifiedDupPairs]] and
@@ -288,14 +287,14 @@ object MinhashPipeline {
     * partition keys = the bucket key); the wave pays its one bkey
     * shuffle, which the (bkey, grp) join then reuses (bkey alone
     * co-locates every (bkey, grp) key). Requires the band table to
-    * carry an `sg` = [[contentFp]] column (write band rows via
-    * `bandKeysOf(sig.withColumn("sg", contentFp($"hl")), Seq("sg"))`).
+    * carry an `sg` = [[contentFp]] column (create the index from
+    * `sig.withColumn("sg", contentFp($"hl"))` with `bandExtra =
+    * Seq("sg")`).
     * [[verifiedDupCappedCte]] is the oracle mirror. */
-  def verifiedDupPairsCapped(wsig: DataFrame, docTable: String,
-                             bandTable: String, cap: Int): DataFrame = {
+  def verifiedDupPairsCapped(wsig: DataFrame, h: MinhashIndex.Handle,
+                             cap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ss = wsig.sparkSession
-    val ib = ss.table(bandTable) // (doc_id, bkey, sg), bucketed on bkey
+    val ib = h.spark.table(h.bandTable) // (doc_id, bkey, sg), bucketed on bkey
     val hot = count(lit(1)).over(Window.partitionBy(col("bkey"))) > cap
     val idx = ib
       .withColumn("grp", when(hot, col("sg")).otherwise(lit(0L)))
@@ -312,15 +311,15 @@ object MinhashPipeline {
       .select(col("w_id"), col("bkey"), col("grp"))
     val cand = wb.join(idx, Seq("bkey", "grp"))
       .select(col("w_id"), col("idx_id")).distinct()
-    verifyPairs(cand, wsig, docTable)
+    verifyPairs(cand, wsig, h.docTable)
   }
 
   /** The ACCEPT side of the capped contract — [[acceptAgainstIndex]]
     * with [[verifiedDupPairsCapped]] as the candidate generator. */
-  def acceptAgainstIndexCapped(wsig: DataFrame, docTable: String,
-                               bandTable: String, cap: Int): DataFrame =
+  def acceptAgainstIndexCapped(wsig: DataFrame, h: MinhashIndex.Handle,
+                               cap: Int): DataFrame =
     wsig.join(
-      verifiedDupPairsCapped(wsig, docTable, bandTable, cap)
+      verifiedDupPairsCapped(wsig, h, cap)
         .select(col("w_id").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
 
@@ -328,10 +327,9 @@ object MinhashPipeline {
     * in the index (these are what an epoch commit appends). Anti-join
     * keeps every `wsig` column, so staged novelties carry their
     * signature through to the commit. */
-  def acceptAgainstIndex(wsig: DataFrame, docTable: String,
-                         bandTable: String): DataFrame =
+  def acceptAgainstIndex(wsig: DataFrame, h: MinhashIndex.Handle): DataFrame =
     wsig.join(
-      verifiedDupPairs(wsig, docTable, bandTable)
+      verifiedDupPairs(wsig, h)
         .select(col("w_id").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
 

@@ -6,13 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.functions.{VectorFunctions => VF}
 
 /** The persistent SEMANTIC dedup index — the embedding-family sibling
-  * of the minhash index lifecycle (q99 build / q109 stream / q110
-  * compact / q112 retract), as ONE definition shared by every gate
-  * that drives it (q120 incremental ingest, q122 compaction, q123
-  * retraction, q124 retrain) so a retune of the probe/verify contract
-  * can never drift the gates apart — the
-  * [[graft.functions.MinhashPipeline.acceptAgainstIndex]] discipline
-  * applied to the embedding family.
+  * of [[MinhashIndex]] (q99 build / q109 stream / q110 compact / q112
+  * retract), as ONE lifecycle shared by every gate that drives it
+  * (q120 incremental ingest, q122 compaction, q123 retraction, q124
+  * retrain, q128 drift retrain, q132 streaming, q133/q136/q137 on
+  * multimodal features) so a retune of the probe/verify contract or
+  * the store layout can never drift the gates apart.
   *
   * Layout: each vector is stored in its 2 nearest TRAINED cells
   * ([[IvfKmeans.rankCells]] spill — boundary near-dups still collide),
@@ -34,9 +33,40 @@ object SemanticIndex {
 
   /** One index handle: the cell-bucketed store plus the FROZEN
     * centroid frame its waves probe against. `threshX1e6` is the
-    * cosine near-dup threshold (floor(cos*1e6)). */
+    * cosine near-dup threshold (floor(cos*1e6)); `buckets` the
+    * store's CURRENT bucket count (a [[compact]] or
+    * [[retrainReassign]] returns the grown handle); `extra` the
+    * metadata columns every stored row carries (q137's entity
+    * fingerprint `fp`). */
   final case class Handle(spark: SparkSession, table: String, path: String,
-                          cents: DataFrame, buckets: Int, threshX1e6: Long)
+                          cents: DataFrame, buckets: Int, threshX1e6: Long,
+                          extra: Seq[String] = Nil)
+
+  /** The handle of the store `create` lays out under `root`; no I/O. */
+  def open(spark: SparkSession, table: String, root: String,
+           cents: DataFrame, threshX1e6: Long, extra: Seq[String] = Nil,
+           buckets: Int = graft.functions.DedupConfig.IndexBuckets): Handle =
+    Handle(spark, table, s"$root/idx", cents, buckets, threshX1e6, extra)
+
+  /** Train `k` cells on a (vec_id, qv [, ...]) seed with `iters` Lloyd
+    * iterations; materialized, since every wave probes the frame. */
+  def train(seed: DataFrame, k: Int, iters: Int): DataFrame =
+    IvfKmeans.train(seed.select(col("vec_id"), col("qv")), k, iters)
+      .localCheckpoint(true)
+
+  /** Build a fresh index: drop the table, clear `root`, train the
+    * FROZEN centroids on `seed` (vec_id, v, nrm, qv [, extra...]) and
+    * write it as epoch 0. */
+  def create(table: String, root: String, seed: DataFrame, k: Int,
+             iters: Int, threshX1e6: Long, extra: Seq[String] = Nil,
+             buckets: Int = graft.functions.DedupConfig.IndexBuckets): Handle = {
+    val spark = seed.sparkSession
+    graft.sources.Bucketed.reset(spark, Seq(table), root)
+    val h = open(spark, table, root, train(seed, k, iters), threshX1e6,
+      extra, buckets)
+    writeEpoch0(h, seed)
+    h
+  }
 
   /** Spill assignment of (vec_id, v, nrm, qv [, extra...]) rows into
     * their 2 nearest cells — the index's storage layout. `extra`
@@ -51,7 +81,7 @@ object SemanticIndex {
     * every later wave joins it exchange-free). */
   def writeEpoch0(h: Handle, seed: DataFrame): Unit =
     graft.sources.Bucketed.writeBucketed(
-      spilled(h, seed).withColumn("epoch", lit(0)),
+      spilled(h, seed, h.extra).withColumn("epoch", lit(0)),
       h.table, h.buckets, Seq("cell"), path = Some(h.path))
 
   /** The ACCEPT side of the verify-before-insert contract: wave rows
@@ -152,15 +182,29 @@ object SemanticIndex {
       .select(col("vec_id"), col("fp"))
   }
 
-  /** Commit an accepted frame as `epoch`: spill-assign and append.
-    * `buckets` must match the table's CURRENT bucket spec (it changes
-    * across a q122 compaction). */
-  def commit(h: Handle, acc: DataFrame, epoch: Int,
-             buckets: Int): Unit = {
+  /** Commit an accepted frame (carrying the handle's `extra`
+    * columns) as `epoch`: spill-assign and append at the handle's
+    * bucket count. */
+  def commit(h: Handle, acc: DataFrame, epoch: Int): Unit = {
     graft.sources.Bucketed.writeBucketed(
-      spilled(h, acc).withColumn("epoch", lit(epoch)),
-      h.table, buckets, Seq("cell"), mode = "append", path = Some(h.path))
+      spilled(h, acc, h.extra).withColumn("epoch", lit(epoch)),
+      h.table, h.buckets, Seq("cell"), mode = "append", path = Some(h.path))
     h.spark.catalog.refreshByPath(h.path)
+  }
+
+  /** Staged rows whose vec_id is not committed yet — what makes a
+    * commit-level retry add 0 vectors independently of staging. */
+  def uncommitted(h: Handle, staged: DataFrame): DataFrame =
+    staged.join(h.spark.table(h.table).select("vec_id").distinct(),
+      Seq("vec_id"), "left_anti")
+
+  /** Compact the store to `buckets` ([[graft.sources.Bucketed.compact]]:
+    * epoch file sets collapsed, crash-safe staged swap). Returns the
+    * handle later commits and retractions must use. */
+  def compact(h: Handle, buckets: Int): Handle = {
+    graft.sources.Bucketed.compact(h.spark, h.table, buckets, Seq("cell"),
+      h.path)
+    h.copy(buckets = buckets)
   }
 
   /** The gate rollup: per-epoch distinct-vector count + id sum (each
@@ -176,27 +220,20 @@ object SemanticIndex {
     * rows of each tombstoned vector disappear, so no ghost cell entry
     * can reject a future wave. Run at an epoch barrier; at 100 TB the
     * same tombstone frame can instead be anti-joined per wave until
-    * the next compaction physically purges it (q112's note).
-    *
-    * `buckets` must match the table's CURRENT bucket spec, same as
-    * [[commit]]: an external `Bucketed.compact` (q122) grows the
-    * bucket count without updating the Handle, so a retract keyed off
-    * stale `h.buckets` would silently shrink the spec back. Callers
-    * that never compacted pass nothing (defaults to `h.buckets`). */
-  def retract(h: Handle, tombstones: DataFrame,
-              buckets: Int = -1): Unit =
+    * the next compaction physically purges it (q112's note). */
+  def retract(h: Handle, tombstones: DataFrame): Unit =
     graft.sources.Bucketed.replaceWith(h.spark, h.table,
       h.spark.table(h.table).join(tombstones, Seq("vec_id"), "left_anti"),
-      if (buckets > 0) buckets else h.buckets, Seq("cell"), h.path)
+      h.buckets, Seq("cell"), h.path)
 
   /** The DISTINCT committed vectors of the store with their quantized
     * coordinates recomputed from the stored doubles (bit-identical to
     * quantizing the original floats: both are floor(double*1000)) —
     * the input a retrain (q124) consumes. Keeps (epoch, vec_id, v,
-    * nrm, qv). */
+    * nrm, <extra>, qv). */
   def committedVectors(h: Handle, offset: Long): DataFrame =
     h.spark.table(h.table)
-      .select(col("epoch"), col("vec_id"), col("v"), col("nrm"))
+      .select((Seq("epoch", "vec_id", "v", "nrm") ++ h.extra).map(col): _*)
       .distinct()
       .withColumn("qv", transform(col("v"),
         x => floor(x * 1000).cast("long") + offset))
@@ -212,11 +249,9 @@ object SemanticIndex {
   def retrainReassign(h: Handle, offset: Long, k: Int, iters: Int,
                       buckets: Int): Handle = {
     val cm = committedVectors(h, offset).localCheckpoint(true)
-    val cents = IvfKmeans.train(cm.select(col("vec_id"), col("qv")), k, iters)
-      .localCheckpoint(true)
-    val h2 = h.copy(cents = cents, buckets = buckets)
+    val h2 = h.copy(cents = train(cm, k, iters), buckets = buckets)
     graft.sources.Bucketed.replaceWith(h.spark, h.table,
-      spilled(h2, cm, extra = Seq("epoch")),
+      spilled(h2, cm, extra = h.extra :+ "epoch"),
       buckets, Seq("cell"), h.path)
     h2
   }

@@ -1,8 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.operators.{IvfKmeans, MinhashIndex, SemanticIndex}
 
 /** Large-scale training-data pipeline operators over the `documents`
   * and `embeddings` tables: deduplication (exact, MinHash+LSH, SimHash,
@@ -364,7 +366,6 @@ object QueriesLlm {
     * semantics-free and q132's batching/staging/commit machinery
     * provably acceptance-neutral. */
   private lazy val semanticEpochOracle: String = {
-    import graft.operators.IvfKmeans
     s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, " WHERE vec_id % 2 = 0")},
        |$semEallCte,
        |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0),
@@ -424,6 +425,101 @@ object QueriesLlm {
        |$a AS (
        |  SELECT p.vec_id, p.v, p.nrm, p.qv FROM $p p
        |  LEFT JOIN $d d ON d.vec_id = p.vec_id WHERE d.vec_id IS NULL)""".stripMargin
+
+  // ---- engine mirrors of the shared oracle fragments above: one
+  // definition per fragment, so no gate re-derives its corpus, waves
+  // or features by hand (and the specs that replay a gate pin its own
+  // definitions, not a copy).
+
+  /** The minhash index gates' corpus contract — the oracles' `corpus`
+    * CTE: the doc_id%4 subset keeps the verify cost catalog-friendly
+    * (q99's note) and len >= 3 removes the short-doc asymmetry (native
+    * `shingle_hashes` keeps a sub-3-char doc as one whole-string hash,
+    * the oracle's 3-gram comprehension drops it). */
+  private[graft] def textCorpus(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
+      .select("doc_id", "lang", "text")
+
+  /** The two ingest waves of [[epochDedupOracle]] over [[textCorpus]]:
+    * w1 = exact copies (%20 == 0) + reversed-text decoys (%20 == 4);
+    * w2 = the same decoy texts under new ids + fresh decoys (%20 == 8).
+    * q99's single wave is w1. */
+  private[graft] def textWaves(corpus: DataFrame): (DataFrame, DataFrame) = {
+    def stratum(m: Int, shift: Long, reversed: Boolean) = {
+      val s = corpus.filter(col("doc_id") % 20 === m)
+        .withColumn("doc_id", col("doc_id") + shift)
+      if (reversed) s.withColumn("text", reverse(col("text"))) else s
+    }
+    (stratum(0, 200000L, reversed = false)
+       .unionByName(stratum(4, 300000L, reversed = true)),
+     stratum(4, 400000L, reversed = true)
+       .unionByName(stratum(8, 500000L, reversed = true)))
+  }
+
+  /** Quantization offset, near-dup threshold (cos >= 0.4) and cell
+    * training (K, Lloyd iterations) of the embedding-family index
+    * gates — the constants [[semanticEpochOracle]] replays. */
+  private[graft] val SemOff = 4000L
+  private[graft] val SemThresh = 400000L
+  private[graft] val SemK = 8
+  private[graft] val SemIters = 3
+
+  /** [[semEallCte]]'s embedding frame (vec_id, v, qv, nrm) over any
+    * (vec_id, embedding) frame. */
+  private[graft] def semFrame(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
+        IvfKmeans.quantize(col("embedding"), SemOff).as("qv"))
+      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+  private def semFrame(spark: org.apache.spark.sql.SparkSession,
+                       dir: String): DataFrame =
+    semFrame(table(spark, dir, "embeddings"))
+
+  /** The semantic oracles' seed (`sd`: every even vec_id). */
+  private[graft] def semSeed(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") % 2 === 0)
+
+  /** The two ingest waves of [[semanticEpochOracle]]: w1 = novel
+    * vectors (%20 == 1) + exact copies of seeds (%10 == 0); w2 = fresh
+    * vectors (%20 == 11) + copies of w1's novelties (%20 == 1). */
+  private[graft] def semWaves(e: DataFrame): (DataFrame, DataFrame) = {
+    def stratum(keep: org.apache.spark.sql.Column, shift: Long) =
+      e.filter(keep).withColumn("vec_id", col("vec_id") + shift)
+    (stratum(col("vec_id") % 20 === 1, 100000L)
+       .unionByName(stratum(col("vec_id") % 10 === 0, 200000L)),
+     stratum(col("vec_id") % 20 === 11, 300000L)
+       .unionByName(stratum(col("vec_id") % 20 === 1, 400000L)))
+  }
+
+  /** q131's hot-cell corpus over a (vec_id, embedding) frame: the
+    * base, a 1-in-7 exact-copy family, and a flood of copies of the
+    * lowest-id vector (one hot cell by construction). */
+  private[graft] def hotCellCorpus(base: DataFrame): DataFrame = {
+    val anchor = base.orderBy(col("vec_id")).limit(1)
+      .select(col("embedding").as("ae"))
+    base
+      .unionByName(base.filter(col("vec_id") % 7 === 0)
+        .withColumn("vec_id", col("vec_id") + 100000L))
+      .unionByName(base
+        .crossJoin(broadcast(anchor)) // 1-row side -> broadcast
+        .select((col("vec_id") + 200000L).as("vec_id"),
+          col("ae").as("embedding")))
+  }
+
+  /** [[mmFeatsCte]]'s features over a (vec_id, txt) frame: the 8-bin
+    * high-nibble byte histogram `v`, its norm, and `qv` quantizing the
+    * LENGTH-NORMALIZED histogram — raw counts scale with document
+    * length, so an L2 quantizer over them clusters by length while
+    * accept/search score by cosine (q130 measured recall@3 0.14/0.21
+    * on raw counts); on unit vectors L2 is monotone in cosine. */
+  private[graft] def mmFeats(src: DataFrame): DataFrame = {
+    val hist = (0 until 8).map(b =>
+      s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
+    src.selectExpr("vec_id", "transform(split(txt, ''), c -> ascii(c)) AS codes")
+      .selectExpr("vec_id", s"CAST(array($hist) AS array<double>) AS v")
+      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+      .withColumn("qv", IvfKmeans.quantize(
+        transform(col("v"), x => x / col("nrm")), 0L))
+  }
 
   /** DuckDB LSH bucket of a DOUBLE list column `v`. */
   private def bucketSql(v: String): String =
@@ -1088,13 +1184,9 @@ object QueriesLlm {
     // multimodal training-data pipeline end to end.
     Q("q58_multimodal_embed",
       (spark, dir) => {
-        val hist = (0 until 8).map(b =>
-          s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
-        val e = table(spark, dir, "documents")
-          .selectExpr("doc_id",
-            "transform(split(text, ''), c -> ascii(c)) AS codes")
-          .selectExpr("doc_id", s"CAST(array($hist) AS array<double>) AS v")
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val e = mmFeats(table(spark, dir, "documents")
+            .select(col("doc_id").as("vec_id"), col("text").as("txt")))
+          .select(col("vec_id").as("doc_id"), col("v"), col("nrm"))
         val q = e.filter(col("doc_id") % 37 === 0)
           .select(col("doc_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
         val w = Window.partitionBy(col("qid")).orderBy(col("sim_x1e6").desc, col("doc_id"))
@@ -1903,45 +1995,22 @@ object QueriesLlm {
     // cost without changing any operator shape.
     Q("q99_incremental_dedup",
       (spark, dir) => {
-        val docPath = s"${QueriesSources.FixtureDir}/dedup_index_docs"
-        val bandPath = s"${QueriesSources.FixtureDir}/dedup_index_bands"
-        spark.sql("DROP TABLE IF EXISTS graft_q99_docs")
-        spark.sql("DROP TABLE IF EXISTS graft_q99_bands")
-        Fixtures.rmrf(new java.io.File(docPath))
-        Fixtures.rmrf(new java.io.File(bandPath))
         // shingle-hash lists + signatures via the shared signedDocs /
         // bandKeysOf front end (hl SORTED for the native two-pointer
         // `sorted_inter_count` verify — allocation-free, codegen; ~3x
         // over array_intersect on the candidate-pair loop; no shingle
-        // strings, no bitmap dictionary).
-        // length(text) >= 3 is mirrored in the oracle's corpus CTE: for
-        // sub-3-char strings native shingle_hashes falls back to one
-        // whole-string hash (doc kept) while the oracle's 3-gram
-        // comprehension yields an empty list (doc dropped) — filtering
-        // identically on both sides removes the engine asymmetry.
-        val corpus = table(spark, dir, "documents")
-          .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-          .select("doc_id", "lang", "text")
+        // strings, no bitmap dictionary); corpus contract in textCorpus
+        val corpus = textCorpus(table(spark, dir, "documents"))
         val index = signedDocs(corpus).localCheckpoint(true) // docs write + bands write
-        graft.sources.Bucketed.writeBucketed(index.select("doc_id", "hl", "sz"),
-          "graft_q99_docs", graft.functions.DedupConfig.IndexBuckets,
-          Seq("doc_id"), path = Some(docPath))
-        graft.sources.Bucketed.writeBucketed(bandKeysOf(index),
-          "graft_q99_bands", graft.functions.DedupConfig.IndexBuckets,
-          Seq("bkey"), path = Some(bandPath))
-        spark.catalog.refreshByPath(docPath)
-        spark.catalog.refreshByPath(bandPath)
+        val h = MinhashIndex.create("graft_q99",
+          s"${QueriesSources.FixtureDir}/dedup_index", index)
         // ---- the ingest wave (exact copies + reversed decoys)
-        val wave = corpus.filter(col("doc_id") % 20 === 0)
-          .withColumn("doc_id", col("doc_id") + 200000L)
-          .unionByName(corpus.filter(col("doc_id") % 20 === 4)
-            .withColumn("doc_id", col("doc_id") + 300000L)
-            .withColumn("text", reverse(col("text"))))
-        val wsig = signedDocs(wave).localCheckpoint(true) // bands + verify + rollup
+        val wsig = signedDocs(textWaves(corpus)._1)
+          .localCheckpoint(true) // bands + verify + rollup
         // candidate band join + size-ratio prune + native
         // sorted_inter_count verify — the shared engine-side block
         // (functions/MinhashPipeline), one definition with q109/q110/q112
-        val verified = verifiedDupPairs(wsig, "graft_q99_docs", "graft_q99_bands")
+        val verified = verifiedDupPairs(wsig, h)
         wsig.select(col("doc_id"), col("lang"))
           .join(verified.groupBy(col("w_id").as("doc_id"))
             .agg(count(lit(1)).as("n_matches"), min(col("idx_id")).as("first_match")),
@@ -2445,41 +2514,15 @@ object QueriesLlm {
       (spark, dir) => {
         import org.apache.spark.sql.streaming.Trigger
         val root = s"${Fixtures.scratchRoot}/streamdedup"
-        val docPath = s"$root/idx_docs"
-        val bandPath = s"$root/idx_bands"
-        val docTable = "graft_q109_docs"
-        val bandTable = "graft_q109_bands"
-        spark.sql(s"DROP TABLE IF EXISTS $docTable")
-        spark.sql(s"DROP TABLE IF EXISTS $bandTable")
-        Fixtures.rmrf(new java.io.File(root))
-        // doc_id%4 subset + len>=3, exactly q99's corpus contract
-        // (both documented there: gate cost + short-doc symmetry)
-        val corpus = table(spark, dir, "documents")
-          .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-          .select("doc_id", "lang", "text")
-        // ---- epoch 0: the seed index
+        // q99's corpus contract (textCorpus)
+        val corpus = textCorpus(table(spark, dir, "documents"))
+        // ---- epoch 0: the seed index (bucket count is a CAPACITY
+        // parameter, DedupConfig scaladoc; IndexBuckets suits the gate
+        // corpora)
         val seed = signedDocs(corpus).localCheckpoint(true) // 2 writes
-        // bucket count is a CAPACITY parameter (DedupConfig scaladoc);
-        // IndexBuckets suits the gate corpora
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        graft.sources.Bucketed.writeBucketed(
-          seed.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-            .withColumn("epoch", lit(0)),
-          docTable, nb, Seq("doc_id"), path = Some(docPath))
-        graft.sources.Bucketed.writeBucketed(bandKeysOf(seed),
-          bandTable, nb, Seq("bkey"), path = Some(bandPath))
+        val h = MinhashIndex.create("graft_q109", root, seed)
         // ---- wave sources on disk (4 files each -> 2 micro-batches)
-        val w1 = corpus.filter(col("doc_id") % 20 === 0)
-          .withColumn("doc_id", col("doc_id") + 200000L)
-          .unionByName(corpus.filter(col("doc_id") % 20 === 4)
-            .withColumn("doc_id", col("doc_id") + 300000L)
-            .withColumn("text", reverse(col("text"))))
-        val w2 = corpus.filter(col("doc_id") % 20 === 4)
-          .withColumn("doc_id", col("doc_id") + 400000L)
-          .withColumn("text", reverse(col("text")))
-          .unionByName(corpus.filter(col("doc_id") % 20 === 8)
-            .withColumn("doc_id", col("doc_id") + 500000L)
-            .withColumn("text", reverse(col("text"))))
+        val (w1, w2) = textWaves(corpus)
         w1.repartition(4).write.mode("overwrite").parquet(s"$root/src1")
         w2.repartition(4).write.mode("overwrite").parquet(s"$root/src2")
         val srcSchema = spark.read.parquet(s"$root/src1").schema
@@ -2499,7 +2542,7 @@ object QueriesLlm {
               // batchId is stable across retries -> a replayed batch
               // OVERWRITES its own staging directory (idempotent),
               // never appends a second copy
-              acceptAgainstIndex(bs, docTable, bandTable)
+              acceptAgainstIndex(bs, h)
                 .select(col("doc_id"), col("lang"), col("hl"), col("sz"), col("sig"))
                 .write.mode("overwrite").parquet(s"$stage/batch=$batchId")
             }
@@ -2539,24 +2582,10 @@ object QueriesLlm {
           // construction, not by relying on staging overwrite
           // semantics. Cost: one id-only anti-join against the
           // bucketed index (exchange-free on the index side).
-          val novel = staged
-            .join(spark.table(docTable).select("doc_id"), Seq("doc_id"), "left_anti")
+          val novel = MinhashIndex.uncommitted(h, staged)
             .localCheckpoint(true) // 2 writes + count
-          // bands BEFORE docs: novelty is judged against the doc
-          // table, so a crash between the appends leaves bands
-          // committed but docs not — the retry re-appends both, and
-          // the duplicate band rows are absorbed by the candidate
-          // `distinct()`. The reverse order would leave committed
-          // docs with NO band entries: unfindable, silently missed
-          // duplicates forever after.
-          graft.sources.Bucketed.writeBucketed(bandKeysOf(novel),
-            bandTable, nb, Seq("bkey"), mode = "append", path = Some(bandPath))
-          graft.sources.Bucketed.writeBucketed(
-            novel.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-              .withColumn("epoch", lit(epoch)),
-            docTable, nb, Seq("doc_id"), mode = "append", path = Some(docPath))
-          spark.catalog.refreshByPath(docPath)
-          spark.catalog.refreshByPath(bandPath)
+          // bands BEFORE docs (MinhashIndex.commit's crash argument)
+          MinhashIndex.commit(h, novel, epoch)
           novel.count()
         }
         runStream(1, s"$root/src1")
@@ -2566,11 +2595,7 @@ object QueriesLlm {
         // not re-proven per bench pass; see the RETRY SAFETY note.)
         runStream(2, s"$root/src2")
         commitEpoch(2)
-        spark.table(docTable)
-          .groupBy(col("epoch"), col("lang"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("sz")).as("sum_sz"),
-            sum(col("doc_id")).as("sum_id"))
-          .orderBy(col("epoch"), col("lang"))
+        MinhashIndex.rollup(h)
       },
       Some(epochDedupOracle)),
 
@@ -2578,7 +2603,7 @@ object QueriesLlm {
     // batch twin of q109 (same corpus contract, same two wave strata,
     // same epoch commits) with one difference — between the epoch-1
     // commit and wave 2, the doc and band index tables are compacted
-    // with `Bucketed.compact` (epoch file sets collapsed AND bucket
+    // with `MinhashIndex.compact` (epoch file sets collapsed AND bucket
     // count doubled 8 -> 16, the capacity-growth rewrite from the
     // q109 maintenance note in PLANS.md). Wave 2 then dedups against
     // the COMPACTED index — exchange-free at the new bucket count —
@@ -2590,67 +2615,23 @@ object QueriesLlm {
     // ingestion pipeline without changing any acceptance decision.
     Q("q110_index_compaction",
       (spark, dir) => {
-        val root = s"${Fixtures.scratchRoot}/compactdedup"
-        val docPath = s"$root/idx_docs"
-        val bandPath = s"$root/idx_bands"
-        val docTable = "graft_q110_docs"
-        val bandTable = "graft_q110_bands"
-        spark.sql(s"DROP TABLE IF EXISTS $docTable")
-        spark.sql(s"DROP TABLE IF EXISTS $bandTable")
-        Fixtures.rmrf(new java.io.File(root))
-        val corpus = table(spark, dir, "documents")
-          .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-          .select("doc_id", "lang", "text")
-        val nb = graft.functions.DedupConfig.IndexBuckets
+        val corpus = textCorpus(table(spark, dir, "documents"))
         // ---- epoch 0: the seed index (q109's batch shape)
         val seed = signedDocs(corpus).localCheckpoint(true) // 2 writes
-        graft.sources.Bucketed.writeBucketed(
-          seed.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-            .withColumn("epoch", lit(0)),
-          docTable, nb, Seq("doc_id"), path = Some(docPath))
-        graft.sources.Bucketed.writeBucketed(bandKeysOf(seed),
-          bandTable, nb, Seq("bkey"), path = Some(bandPath))
+        val h = MinhashIndex.create("graft_q110",
+          s"${Fixtures.scratchRoot}/compactdedup", seed)
         // accepted (novel) docs of a signed wave vs the CURRENT index —
         // the shared acceptAgainstIndex (functions/MinhashPipeline)
-        def accept(wsig: org.apache.spark.sql.DataFrame) =
-          acceptAgainstIndex(wsig, docTable, bandTable)
+        def accept(idx: MinhashIndex.Handle, w: DataFrame) =
+          acceptAgainstIndex(signedDocs(w), idx)
             .localCheckpoint(true) // 2 writes below
-        // append must match the table's CURRENT bucket spec
-        def commit(epoch: Int, accepted: org.apache.spark.sql.DataFrame,
-                   buckets: Int): Unit = {
-          graft.sources.Bucketed.writeBucketed(
-            accepted.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-              .withColumn("epoch", lit(epoch)),
-            docTable, buckets, Seq("doc_id"), mode = "append", path = Some(docPath))
-          graft.sources.Bucketed.writeBucketed(bandKeysOf(accepted),
-            bandTable, buckets, Seq("bkey"), mode = "append", path = Some(bandPath))
-          spark.catalog.refreshByPath(docPath)
-          spark.catalog.refreshByPath(bandPath)
-        }
-        val w1 = corpus.filter(col("doc_id") % 20 === 0)
-          .withColumn("doc_id", col("doc_id") + 200000L)
-          .unionByName(corpus.filter(col("doc_id") % 20 === 4)
-            .withColumn("doc_id", col("doc_id") + 300000L)
-            .withColumn("text", reverse(col("text"))))
-        val w2 = corpus.filter(col("doc_id") % 20 === 4)
-          .withColumn("doc_id", col("doc_id") + 400000L)
-          .withColumn("text", reverse(col("text")))
-          .unionByName(corpus.filter(col("doc_id") % 20 === 8)
-            .withColumn("doc_id", col("doc_id") + 500000L)
-            .withColumn("text", reverse(col("text"))))
-        commit(1, accept(signedDocs(w1)), nb)
+        val (w1, w2) = textWaves(corpus)
+        MinhashIndex.commit(h, accept(h, w1), 1)
         // ---- THE OPERATION UNDER TEST: collapse epoch file sets and
         // grow capacity 8 -> 16 buckets, at the epoch barrier
-        graft.sources.Bucketed.compact(spark, docTable, nb * 2,
-          Seq("doc_id"), docPath)
-        graft.sources.Bucketed.compact(spark, bandTable, nb * 2,
-          Seq("bkey"), bandPath)
-        commit(2, accept(signedDocs(w2)), nb * 2)
-        spark.table(docTable)
-          .groupBy(col("epoch"), col("lang"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("sz")).as("sum_sz"),
-            sum(col("doc_id")).as("sum_id"))
-          .orderBy(col("epoch"), col("lang"))
+        val h2 = MinhashIndex.compact(h, h.buckets * 2)
+        MinhashIndex.commit(h2, accept(h2, w2), 2)
+        MinhashIndex.rollup(h2)
       },
       Some(epochDedupOracle)),
 
@@ -2673,39 +2654,19 @@ object QueriesLlm {
     // the hash.
     Q("q112_index_retraction",
       (spark, dir) => {
-        val root = s"${Fixtures.scratchRoot}/retractdedup"
-        val docPath = s"$root/idx_docs"
-        val bandPath = s"$root/idx_bands"
-        val docTable = "graft_q112_docs"
-        val bandTable = "graft_q112_bands"
-        spark.sql(s"DROP TABLE IF EXISTS $docTable")
-        spark.sql(s"DROP TABLE IF EXISTS $bandTable")
-        Fixtures.rmrf(new java.io.File(root))
-        val corpus = table(spark, dir, "documents")
-          .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-          .select("doc_id", "lang", "text")
-        val nb = graft.functions.DedupConfig.IndexBuckets
+        val corpus = textCorpus(table(spark, dir, "documents"))
         val seed = signedDocs(corpus).localCheckpoint(true) // 2 writes
-        graft.sources.Bucketed.writeBucketed(
-          seed.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-            .withColumn("epoch", lit(0)),
-          docTable, nb, Seq("doc_id"), path = Some(docPath))
-        graft.sources.Bucketed.writeBucketed(bandKeysOf(seed),
-          bandTable, nb, Seq("bkey"), path = Some(bandPath))
+        val h = MinhashIndex.create("graft_q112",
+          s"${Fixtures.scratchRoot}/retractdedup", seed)
         // ---- retract R = every 10th indexed doc (doc_id % 40 == 0):
         // tombstone anti-join + bucketed rewrite of BOTH tables (the
-        // band table must lose R's entries too, or ghosts remain)
+        // band table must lose R's entries too, or ghosts remain),
+        // each through the crash-safe staged swap (the kept set is
+        // written to a sibling path from the OLD files before anything
+        // is dropped)
         val tombstones = corpus.filter(col("doc_id") % 40 === 0)
           .select("doc_id").localCheckpoint(true) // 2 rewrites below
-        // filtered rewrite through the crash-safe staged swap
-        // (Bucketed.replaceWith): the kept set is written to a sibling
-        // path from the OLD files before anything is dropped
-        def retract(t: String, keys: Seq[String], p: String): Unit =
-          graft.sources.Bucketed.replaceWith(spark, t,
-            spark.table(t).join(tombstones, Seq("doc_id"), "left_anti"),
-            nb, keys, p)
-        retract(docTable, Seq("doc_id"), docPath)
-        retract(bandTable, Seq("bkey"), bandPath)
+        MinhashIndex.retract(h, tombstones)
         // ---- the probe wave: exact copies of RETRACTED docs (must
         // now be accepted — the observable effect of deletion) mixed
         // with exact copies of RETAINED docs (must still be rejected)
@@ -2715,18 +2676,11 @@ object QueriesLlm {
             .withColumn("doc_id", col("doc_id") + 700000L))
         val wsig = signedDocs(wave).localCheckpoint(true) // bands + verify + anti
         // shared acceptAgainstIndex: index side exchange-free, verify
-        // is the native sorted_inter_count (functions/MinhashPipeline)
-        val accepted = acceptAgainstIndex(wsig, docTable, bandTable)
-        graft.sources.Bucketed.writeBucketed(
-          accepted.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-            .withColumn("epoch", lit(1)),
-          docTable, nb, Seq("doc_id"), mode = "append", path = Some(docPath))
-        spark.catalog.refreshByPath(docPath)
-        spark.table(docTable)
-          .groupBy(col("epoch"), col("lang"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("sz")).as("sum_sz"),
-            sum(col("doc_id")).as("sum_id"))
-          .orderBy(col("epoch"), col("lang"))
+        // is the native sorted_inter_count (functions/MinhashPipeline);
+        // materialized — it feeds both commit writes
+        val accepted = acceptAgainstIndex(wsig, h).localCheckpoint(true)
+        MinhashIndex.commit(h, accepted, 1)
+        MinhashIndex.rollup(h)
       },
       Some(
         s"""WITH corpus AS (SELECT doc_id, lang, text FROM documents
@@ -2770,7 +2724,6 @@ object QueriesLlm {
     // same one-exchange shape (posexplode + groupBy(cid, dim)).
     Q("q113_kmeans_step",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
         val K8 = 8
         // quantization / seeding / argmin are the shared IvfKmeans
         // expressions (offset 0 — a single step needs no positive-sum
@@ -2916,7 +2869,6 @@ object QueriesLlm {
     // keyed by anything but cell/qid.
     Q("q114_ivf_lifecycle",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
         val KC = 8; val Iters = 3; val Off = 4000L
         val q = spark.read.parquet(s"$dir/embeddings.parquet")
           .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), Off).as("qv"))
@@ -2938,7 +2890,6 @@ object QueriesLlm {
           .orderBy(col("qid"), col("rn"))
       },
       Some {
-        import graft.operators.IvfKmeans
         s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L)},
            |${IvfKmeans.assignCte(3, Dim)},
            |cand AS (
@@ -2978,12 +2929,7 @@ object QueriesLlm {
     // 9x probe-side explode, never a corpus-side one.
     Q("q115_ann_recall",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val Off = 4000L
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val e = semFrame(spark, dir)
           .withColumn("bucket", VF.lshBucket(col("v"), Planes, Dim))
         val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), 8, 3)
         val cells = IvfKmeans.assign(e.select(col("vec_id"), col("qv")), cents)
@@ -3028,7 +2974,6 @@ object QueriesLlm {
           .orderBy(col("qid"))
       },
       Some {
-        import graft.operators.IvfKmeans
         def top5Sql(name: String, cond: String) =
           s"""${name}s AS (
              |  SELECT p.qid, eb.vec_id,
@@ -3168,7 +3113,6 @@ object QueriesLlm {
     // in q115.
     Q("q117_ivf_nprobe",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
         val KC = 8; val Iters = 3; val Off = 4000L; val MaxProbe = 4
         val q = spark.read.parquet(s"$dir/embeddings.parquet")
           .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), Off).as("qv"))
@@ -3210,7 +3154,6 @@ object QueriesLlm {
           .orderBy(col("qid"))
       },
       Some {
-        import graft.operators.IvfKmeans
         def topAt(name: String, cond: String) =
           s"""$name AS (
              |  SELECT qid, vec_id FROM (
@@ -3276,12 +3219,7 @@ object QueriesLlm {
     // sharing both cells.
     Q("q118_semantic_dedup_ivf",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val Off = 4000L
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val e = semFrame(spark, dir)
         val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), 8, 3)
         // spill-block + cosine-verify is the shared IvfKmeans
         // definition (one block for q118/q119, the acceptAgainstIndex
@@ -3290,7 +3228,6 @@ object QueriesLlm {
           .orderBy(col("vec_a"), col("vec_b"))
       },
       Some {
-        import graft.operators.IvfKmeans
         s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L)},
            |$embCte,
            |${IvfKmeans.spillPairsCtes(Dim, 400000L, dotSql, normSqSql)}
@@ -3314,12 +3251,7 @@ object QueriesLlm {
     // rollup shuffles cluster-count rows only.
     Q("q119_semantic_dedup_pipeline",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val Off = 4000L
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val e = semFrame(spark, dir)
         val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), 8, 3)
         // same shared spill-block + verify as q118; only the pair set
         // feeds the clustering here
@@ -3344,7 +3276,6 @@ object QueriesLlm {
       // copies passing the self-cosine verify — the same membership
       // rule the doc-level graph induces.
       Some {
-        import graft.operators.IvfKmeans
         s"""WITH RECURSIVE ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L)},
            |$embCte,
            |ecls AS MATERIALIZED (
@@ -3417,41 +3348,22 @@ object QueriesLlm {
     // is corpus/K per probe cell.
     Q("q120_incremental_semantic_dedup",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
-        val root = s"${Fixtures.scratchRoot}/semdedup"
-        val tbl = "graft_q120_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
+        val e = semFrame(spark, dir)
         // rank-based seeding (IvfKmeans.seedCents): the restricted
         // training corpus still yields 8 EFFECTIVE cells — the old
-        // vec_id < k seed silently halved this index to 4 (r9 ADVICE)
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        // the whole ingest lifecycle is the shared SemanticIndex
-        // operator (one definition for q120/q122/q123/q124)
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents,
-          graft.functions.DedupConfig.IndexBuckets, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
-        val w1 = e.filter(col("vec_id") % 20 === 1)
-          .withColumn("vec_id", col("vec_id") + 100000L)
-          .unionByName(e.filter(col("vec_id") % 10 === 0)
-            .withColumn("vec_id", col("vec_id") + 200000L))
-        val w2 = e.filter(col("vec_id") % 20 === 11)
-          .withColumn("vec_id", col("vec_id") + 300000L)
-          .unionByName(e.filter(col("vec_id") % 20 === 1)
-            .withColumn("vec_id", col("vec_id") + 400000L))
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1, h.buckets)
+        // vec_id < k seed silently halved this index to 4 (r9 ADVICE).
+        // The whole ingest lifecycle is the shared SemanticIndex
+        // operator (one definition for every embedding-family gate)
+        val h = SemanticIndex.create("graft_q120_vecs",
+          s"${Fixtures.scratchRoot}/semdedup", semSeed(e), SemK, SemIters,
+          SemThresh)
+        val (w1, w2) = semWaves(e)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         // (replay-accepts-0 — every wave-1 acceptance self-matches its
         // own index entry, probe cell ∈ its spilled cells at cos = 1 —
         // is pinned in StreamReplaySpec rather than re-proven per
         // bench pass; r17, see q109's RETRY SAFETY note.)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2, h.buckets)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2)
         SemanticIndex.rollup(h)
       },
       Some(semanticEpochOracle)),
@@ -3558,37 +3470,17 @@ object QueriesLlm {
     // live ingest pipeline without changing any acceptance decision.
     Q("q122_semantic_index_compaction",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
-        val root = s"${Fixtures.scratchRoot}/semcompact"
-        val tbl = "graft_q122_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents,
-          nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
-        val w1 = e.filter(col("vec_id") % 20 === 1)
-          .withColumn("vec_id", col("vec_id") + 100000L)
-          .unionByName(e.filter(col("vec_id") % 10 === 0)
-            .withColumn("vec_id", col("vec_id") + 200000L))
-        val w2 = e.filter(col("vec_id") % 20 === 11)
-          .withColumn("vec_id", col("vec_id") + 300000L)
-          .unionByName(e.filter(col("vec_id") % 20 === 1)
-            .withColumn("vec_id", col("vec_id") + 400000L))
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1, nb)
+        val e = semFrame(spark, dir)
+        val h = SemanticIndex.create("graft_q122_vecs",
+          s"${Fixtures.scratchRoot}/semcompact", semSeed(e), SemK, SemIters,
+          SemThresh)
+        val (w1, w2) = semWaves(e)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         // ---- THE OPERATION UNDER TEST: collapse epoch file sets and
         // grow capacity 8 -> 16 buckets, at the epoch barrier
-        graft.sources.Bucketed.compact(spark, tbl, nb * 2, Seq("cell"), h.path)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2, nb * 2)
-        SemanticIndex.rollup(h)
+        val h2 = SemanticIndex.compact(h, h.buckets * 2)
+        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w2), 2)
+        SemanticIndex.rollup(h2)
       },
       Some(semanticEpochOracle)),
 
@@ -3609,22 +3501,11 @@ object QueriesLlm {
     // q124's retrain, not a side effect of deletes.
     Q("q123_semantic_index_retraction",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
-        val root = s"${Fixtures.scratchRoot}/semretract"
-        val tbl = "graft_q123_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents,
-          graft.functions.DedupConfig.IndexBuckets, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
+        val e = semFrame(spark, dir)
+        val seed = semSeed(e)
+        val h = SemanticIndex.create("graft_q123_vecs",
+          s"${Fixtures.scratchRoot}/semretract", seed, SemK, SemIters,
+          SemThresh)
         // ---- retract R = every 4th seeded vector (vec_id % 8 == 0):
         // filtered rewrite of the store via the staged swap
         val tombstones = seed.filter(col("vec_id") % 8 === 0)
@@ -3637,11 +3518,10 @@ object QueriesLlm {
           .withColumn("vec_id", col("vec_id") + 600000L)
           .unionByName(e.filter(col("vec_id") % 8 === 4)
             .withColumn("vec_id", col("vec_id") + 700000L))
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, wave), 1, h.buckets)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, wave), 1)
         SemanticIndex.rollup(h)
       },
       Some {
-        import graft.operators.IvfKmeans
         s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, " WHERE vec_id % 2 = 0")},
            |$semEallCte,
            |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0),
@@ -3684,32 +3564,17 @@ object QueriesLlm {
     // paid bucketed rewrite, amortized over every later wave.
     Q("q124_semantic_index_retrain",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
-        val root = s"${Fixtures.scratchRoot}/semretrain"
-        val tbl = "graft_q124_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents0 = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents0,
-          nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
-        val w1 = e.filter(col("vec_id") % 20 === 1)
-          .withColumn("vec_id", col("vec_id") + 100000L)
-          .unionByName(e.filter(col("vec_id") % 10 === 0)
-            .withColumn("vec_id", col("vec_id") + 200000L))
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1, nb)
+        val e = semFrame(spark, dir)
+        val h = SemanticIndex.create("graft_q124_vecs",
+          s"${Fixtures.scratchRoot}/semretrain", semSeed(e), SemK, SemIters,
+          SemThresh)
+        val (w1, w2) = semWaves(e)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         // ---- THE OPERATION UNDER TEST: retrain on the committed
         // corpus, reassign the store to the new cells, swap; waves
         // from here on probe the NEW frozen centroids
-        val h2 = SemanticIndex.retrainReassign(h, Off, 8, 3, nb * 2)
+        val h2 = SemanticIndex.retrainReassign(h, SemOff, SemK, SemIters,
+          h.buckets * 2)
         // (post-retrain replay idempotence — no committed vector is
         // re-accepted under the new geometry, because its self-match
         // survives any spill that includes the crank-1 cell — is a
@@ -3721,21 +3586,16 @@ object QueriesLlm {
         // legitimately become acceptable under the new geometry —
         // replay idempotence for an index means "never duplicate an
         // existing entry", not "reproduce old rejections".)
-        val w2 = e.filter(col("vec_id") % 20 === 11)
-          .withColumn("vec_id", col("vec_id") + 300000L)
-          .unionByName(e.filter(col("vec_id") % 20 === 1)
-            .withColumn("vec_id", col("vec_id") + 400000L))
-        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w2), 2, nb * 2)
+        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w2), 2)
         // geometry-visible rollup: per-epoch distinct cells hash the
         // NEW cell assignment, not just membership
-        spark.table(tbl).groupBy(col("epoch"))
+        spark.table(h2.table).groupBy(col("epoch"))
           .agg(count_distinct(col("vec_id")).as("n_vecs"),
             sum_distinct(col("vec_id")).as("sum_id"),
             count_distinct(col("cell")).as("n_cells"))
           .orderBy(col("epoch"))
       },
       Some {
-        import graft.operators.IvfKmeans
         s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, " WHERE vec_id % 2 = 0")},
            |$semEallCte,
            |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0),
@@ -3791,7 +3651,6 @@ object QueriesLlm {
     // widest level, narrower levels are filters).
     Q("q125_ivf_operating_point",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
         val KC = 8; val Iters = 3; val Off = 4000L; val MaxProbe = 4
         val FloorPct = 50
         val q = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -3841,7 +3700,6 @@ object QueriesLlm {
           .orderBy(col("qid"), col("rn"))
       },
       Some {
-        import graft.operators.IvfKmeans
         def tuneAt(name: String, p: Int) =
           s"""$name AS (
              |  SELECT qid, vec_id FROM (
@@ -4127,27 +3985,14 @@ object QueriesLlm {
     // trigger rather than a constant schedule).
     Q("q128_semantic_drift_retrain",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
-        val root = s"${Fixtures.scratchRoot}/semdrift"
-        val tbl = "graft_q128_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents0 = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents0,
-          nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
+        val e = semFrame(spark, dir)
+        val h = SemanticIndex.create("graft_q128_vecs",
+          s"${Fixtures.scratchRoot}/semdrift", semSeed(e), SemK, SemIters,
+          SemThresh)
         // the drift signal: occupancy skew over ALL store rows (spill
         // included — spill rows are what a probe actually scans)
         def skew(): (Long, Long, Long) = {
-          val r = spark.table(tbl).groupBy(col("cell"))
+          val r = spark.table(h.table).groupBy(col("cell"))
             .agg(count(lit(1)).as("n"))
             .agg(max(col("n")), sum(col("n")), count(lit(1))).head()
           (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -4155,7 +4000,7 @@ object QueriesLlm {
         // wave 1: in-distribution growth -> trigger must HOLD
         val w1 = e.filter(col("vec_id") % 20 === 1)
           .withColumn("vec_id", col("vec_id") + 100000L)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1, nb)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         val (mx1, tot1, nc1) = skew()
         val fire1 = mx1 * nc1 * 2 >= tot1 * 3
         require(!fire1, s"drift trigger fired on in-distribution " +
@@ -4170,24 +4015,25 @@ object QueriesLlm {
           .withColumn("v", zip_with(col("v"), col("av"),
             (x, a) => x + a * lit(5)))
           .withColumn("qv", transform(col("v"),
-            x => floor(x * 1000).cast("long") + lit(Off)))
+            x => floor(x * 1000).cast("long") + lit(SemOff)))
           .withColumn("nrm", sqrt(VF.normSq(col("v"))))
           .withColumn("vec_id", col("vec_id") + 200000L)
           .select("vec_id", "v", "qv", "nrm")
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2, nb)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2)
         val (mx2, tot2, nc2) = skew()
         val fire2 = mx2 * nc2 * 2 >= tot2 * 3
         require(fire2, s"drift trigger held after the drifted wave " +
           s"($mx2 rows max cell, $tot2 total over $nc2 cells)")
         // the decision: retrain fires ONLY because the signal crossed
-        val h2 = if (fire2) SemanticIndex.retrainReassign(h, Off, 8, 3, nb * 2)
-                 else h
+        val h2 = if (fire2)
+            SemanticIndex.retrainReassign(h, SemOff, SemK, SemIters, h.buckets * 2)
+          else h
         val (mx3, tot3, nc3) = skew() // post-retrain read (informational)
         val fire3 = mx3 * nc3 * 2 >= tot3 * 3
         // wave 3 probes whatever geometry the decision produced
         val w3 = e.filter(col("vec_id") % 20 === 11)
           .withColumn("vec_id", col("vec_id") + 300000L)
-        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w3), 3, nb * 2)
+        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w3), 3)
         // hashed output: decision rows (step 1-3: n_max/n_total =
         // occupancy max/total) + per-epoch rollup rows (step 10+epoch:
         // n_max/n_total = n_vecs/sum_id) on the final geometry
@@ -4197,7 +4043,7 @@ object QueriesLlm {
           (2L, mx2, tot2, nc2, if (fire2) 1L else 0L),
           (3L, mx3, tot3, nc3, if (fire3) 1L else 0L))
           .toDF("step", "n_max", "n_total", "n_cells", "fired")
-        val roll = spark.table(tbl)
+        val roll = spark.table(h2.table)
           .select(col("epoch"), col("vec_id"), col("cell")).distinct()
           .groupBy(col("epoch"))
           .agg(count_distinct(col("vec_id")).as("n_max"),
@@ -4209,7 +4055,6 @@ object QueriesLlm {
         dec.unionByName(roll).orderBy(col("step"))
       },
       Some {
-        import graft.operators.IvfKmeans
         val fireSql = "CASE WHEN max(n) * count(*) * 2 >= sum(n) * 3 " +
           "THEN 1 ELSE 0 END"
         def dSql(step: Int, occ: String) =
@@ -4307,15 +4152,11 @@ object QueriesLlm {
     // external-id joins: the accept criterion is data, not code).
     Q("q129_semantic_threshold_point",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
         import org.apache.spark.sql.{Column, DataFrame}
         val Off = 4000L; val FloorPct = 95
         val Ladder = Seq(400000L, 550000L, 700000L)
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
+        val e = semFrame(spark, dir)
+        val seed = semSeed(e)
         val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
           .localCheckpoint(true)
         // in-memory 2x-spill index (q118's shape — the operating
@@ -4388,7 +4229,6 @@ object QueriesLlm {
           .orderBy(col("sect"), col("id"))
       },
       Some {
-        import graft.operators.IvfKmeans
         def mixSql(where: String, comp: String, compCol: String,
                    eps: String, offset: Long) =
           s"""SELECT e.vec_id + $offset AS vec_id,
@@ -4482,7 +4322,6 @@ object QueriesLlm {
     // of variant count.
     Q("q130_multimodal_ann",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
         val Kc = 16; val Iters = 2
         // plan-inspection mode (PlanAssertionsSpec): skip the stage
         // materializations so the COMPLETE declarative plan — search
@@ -4494,26 +4333,13 @@ object QueriesLlm {
         val planOnly = spark.conf.getOption("graft.planOnly").contains("true")
         def mat(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
           if (planOnly) df else df.localCheckpoint(true)
-        val hist = (0 until 8).map(b =>
-          s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
         // materialized once — feeds training, assignment, and the
-        // exact tuning leg
-        val e0 = table(spark, dir, "documents")
-          .selectExpr("doc_id",
-            "transform(split(text, ''), c -> ascii(c)) AS codes")
-          .selectExpr("doc_id AS vec_id",
-            s"CAST(array($hist) AS array<double>) AS v")
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          // quantize the LENGTH-NORMALIZED histogram: raw counts scale
-          // with document length, so an L2 quantizer over them clusters
-          // by length while the search ranks by cosine (direction) —
-          // measured recall@3 was 0.14/0.21 at sf0.01/sf0.1 on the raw
-          // counts vs 0.86+ required. On unit vectors L2 is monotone in
-          // cosine (|a-b|^2 = 2 - 2cos), so the trained cells block by
-          // the SAME geometry the search scores.
-          .withColumn("qv", IvfKmeans.quantize(
-            transform(col("v"), x => x / col("nrm")), 0L))
-        val e = mat(e0)
+        // exact tuning leg; mmFeats quantizes the LENGTH-NORMALIZED
+        // histogram, so the trained cells block by the SAME geometry
+        // the search scores (raw counts measured recall@3 0.14/0.21 at
+        // sf0.01/sf0.1 vs 0.86+ required)
+        val e = mat(mmFeats(table(spark, dir, "documents")
+          .select(col("doc_id").as("vec_id"), col("text").as("txt"))))
         val cents = mat(IvfKmeans.train(e.select(col("vec_id"), col("qv")), Kc, Iters))
         // O(n·K) assignment against the trained frozen quantizer;
         // materialized once — probe side + candidate side + recall
@@ -4579,7 +4405,6 @@ object QueriesLlm {
           .orderBy(col("sect"), col("qid"), col("n1"), col("n2"))
       },
       Some {
-        import graft.operators.IvfKmeans
         val histSql = (0 until 8).map(b =>
           s"CAST(len(list_filter(codes, c -> c // 16 = $b)) AS DOUBLE)")
           .mkString(",\n    ")
@@ -4678,33 +4503,18 @@ object QueriesLlm {
     // never the corpus).
     Q("q131_semantic_hotcell_cap",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
         import graft.functions.DedupConfig.HotBucketCap
-        val Off = 4000L; val Thresh = 400000L; val Kc = 8
-        val base = table(spark, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        val anchor = base.orderBy(col("vec_id")).limit(1)
-          .select(col("embedding").as("ae"))
-        val corpus = base
-          .unionByName(base.filter(col("vec_id") % 7 === 0)
-            .withColumn("vec_id", col("vec_id") + 100000L))
-          .unionByName(base
-            .crossJoin(broadcast(anchor)) // 1-row side -> broadcast
-            .select((col("vec_id") + 200000L).as("vec_id"),
-              col("ae").as("embedding")))
+        val Kc = 8
         // materialized once: feeds training AND the spill assignment
-        val e = corpus.select(col("vec_id"),
-            VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val e = semFrame(hotCellCorpus(table(spark, dir, "embeddings")
+            .select(col("vec_id"), col("embedding"))))
           .localCheckpoint(true)
         val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), Kc, 3)
           .localCheckpoint(true)
-        IvfKmeans.cappedSpillPairs(e, cents, Thresh, Kc, HotBucketCap)
+        IvfKmeans.cappedSpillPairs(e, cents, SemThresh, Kc, HotBucketCap)
           .orderBy(col("vec_a"), col("vec_b"))
       },
       Some {
-        import graft.operators.IvfKmeans
         import graft.functions.DedupConfig.HotBucketCap
         s"""WITH corp AS (
            |  SELECT vec_id, embedding FROM embeddings
@@ -4768,32 +4578,12 @@ object QueriesLlm {
     Q("q132_stream_semantic_dedup",
       (spark, dir) => {
         import org.apache.spark.sql.streaming.Trigger
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
         val root = s"${Fixtures.scratchRoot}/semstream"
-        val tbl = "graft_q132_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents,
-          nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
-        // q120's wave strata, verbatim (the shared-oracle contract)
-        val w1 = e.filter(col("vec_id") % 20 === 1)
-          .withColumn("vec_id", col("vec_id") + 100000L)
-          .unionByName(e.filter(col("vec_id") % 10 === 0)
-            .withColumn("vec_id", col("vec_id") + 200000L))
-        val w2 = e.filter(col("vec_id") % 20 === 11)
-          .withColumn("vec_id", col("vec_id") + 300000L)
-          .unionByName(e.filter(col("vec_id") % 20 === 1)
-            .withColumn("vec_id", col("vec_id") + 400000L))
+        val e = semFrame(spark, dir)
+        val h = SemanticIndex.create("graft_q132_vecs", root, semSeed(e),
+          SemK, SemIters, SemThresh)
+        // q120's wave strata (the shared-oracle contract)
+        val (w1, w2) = semWaves(e)
         // 4 files per wave source -> 2 micro-batches at trigger=2
         w1.repartition(4).write.mode("overwrite").parquet(s"$root/src1")
         w2.repartition(4).write.mode("overwrite").parquet(s"$root/src2")
@@ -4838,11 +4628,9 @@ object QueriesLlm {
                 spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], srcSchema)
             else spark.read.schema(srcSchema)
               .parquet(batchDirs.toIndexedSeq: _*)
-          val novel = staged
-            .join(spark.table(tbl).select("vec_id").distinct(),
-              Seq("vec_id"), "left_anti")
+          val novel = SemanticIndex.uncommitted(h, staged)
             .localCheckpoint(true) // commit write + count
-          SemanticIndex.commit(h, novel, epoch, nb)
+          SemanticIndex.commit(h, novel, epoch)
           novel.count()
         }
         runStream(1, s"$root/src1")
@@ -4884,30 +4672,14 @@ object QueriesLlm {
     // per epoch, decode/feature extraction is map-only.
     Q("q133_multimodal_index",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
         val Thresh = 900000L
-        val root = s"${Fixtures.scratchRoot}/mmindex"
-        val tbl = "graft_q133_mm"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
-        val hist = (0 until 8).map(b =>
-          s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
-        def feats(src: org.apache.spark.sql.DataFrame) = src
-          .selectExpr("vec_id", "transform(split(txt, ''), c -> ascii(c)) AS codes")
-          .selectExpr("vec_id", s"CAST(array($hist) AS array<double>) AS v")
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          .withColumn("qv", IvfKmeans.quantize(
-            transform(col("v"), x => x / col("nrm")), 0L))
         val d = table(spark, dir, "documents").select(col("doc_id"), col("text"))
-        val seed = feats(d.select(col("doc_id").as("vec_id"),
+        val seed = mmFeats(d.select(col("doc_id").as("vec_id"),
             col("text").as("txt")))
           .localCheckpoint(true) // feeds training AND the epoch-0 write
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 2)
-          .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx", cents, nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
-        val w1 = feats(
+        val h = SemanticIndex.create("graft_q133_mm",
+          s"${Fixtures.scratchRoot}/mmindex", seed, 8, 2, Thresh)
+        val w1 = mmFeats(
           d.filter(col("doc_id") % 5 === 0)
             .select((col("doc_id") + 100000L).as("vec_id"), col("text").as("txt"))
           .unionByName(d.filter(col("doc_id") % 5 === 1)
@@ -4924,8 +4696,8 @@ object QueriesLlm {
           "an exact byte-copy passed the multimodal accept gate")
         require(acc1.count() > 0L,
           "the case-flipped stratum was wholly rejected — accept path dead")
-        SemanticIndex.commit(h, acc1, 1, nb)
-        val w2 = feats(
+        SemanticIndex.commit(h, acc1, 1)
+        val w2 = mmFeats(
           d.filter(col("doc_id") % 5 === 1)
             .select((col("doc_id") + 300000L).as("vec_id"),
               upper(col("text")).as("txt"))
@@ -4939,11 +4711,10 @@ object QueriesLlm {
           "a copy of an epoch-1 commit re-entered — commit not visible")
         require(acc2.count() > 0L,
           "the mixed-case stratum was wholly rejected — accept path dead")
-        SemanticIndex.commit(h, acc2, 2, nb)
+        SemanticIndex.commit(h, acc2, 2)
         SemanticIndex.rollup(h)
       },
       Some {
-        import graft.operators.IvfKmeans
         s"""WITH dsrc AS (SELECT doc_id, text FROM documents),
            |${mmFeatsCte("f0", "(SELECT doc_id AS vec_id, text AS txt FROM dsrc)")},
            |${IvfKmeans.lloydCtes(8, 2, 8, 0L,
@@ -5029,7 +4800,6 @@ object QueriesLlm {
     // cell geometry).
     Q("q134_index_geometry_point",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
         val Off = 4000L; val Iters = 2; val OccBudget = 96L
         val Ladder = Seq(4, 8, 16, 64, 256)
         val q = table(spark, dir, "embeddings")
@@ -5070,7 +4840,6 @@ object QueriesLlm {
           .orderBy(col("sect"), col("id"))
       },
       Some {
-        import graft.operators.IvfKmeans
         val rungs = Seq(4, 8, 16, 64, 256)
         val chains = rungs.map { k =>
           s"""${IvfKmeans.lloydCtes(k, 2, Dim, 4000L,
@@ -5314,8 +5083,8 @@ object QueriesLlm {
     // is feature-agnostic, so this gate's work is proving it against
     // byte-histogram content. Lifecycle: epoch-0 seed (every doc),
     // wave-1 ingest (exact copies must reject, case-flips accept ->
-    // epoch 1), COMPACT (collapse epoch file sets, grow buckets
-    // nb -> 2nb), then RETRACT the ENTIRE epoch-1 commit set. The
+    // epoch 1), COMPACT (collapse epoch file sets, double the bucket
+    // count), then RETRACT the ENTIRE epoch-1 commit set. The
     // class-level tombstone is deliberate, a feature-resolution fact
     // this gate documents: 8-bin byte histograms of same-case text
     // are mutually cos >= 0.998 (measured at sf0.001/0.01/0.1), so
@@ -5341,30 +5110,14 @@ object QueriesLlm {
     // the barrier); SURVEY §5.5 retention discipline.
     Q("q136_multimodal_compact_retract",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
         val Thresh = 900000L
-        val root = s"${Fixtures.scratchRoot}/mmcr"
-        val tbl = "graft_q136_mm"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
-        val hist = (0 until 8).map(b =>
-          s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
-        def feats(src: org.apache.spark.sql.DataFrame) = src
-          .selectExpr("vec_id", "transform(split(txt, ''), c -> ascii(c)) AS codes")
-          .selectExpr("vec_id", s"CAST(array($hist) AS array<double>) AS v")
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          .withColumn("qv", IvfKmeans.quantize(
-            transform(col("v"), x => x / col("nrm")), 0L))
         val d = table(spark, dir, "documents").select(col("doc_id"), col("text"))
-        val seed = feats(d.select(col("doc_id").as("vec_id"),
+        val seed = mmFeats(d.select(col("doc_id").as("vec_id"),
             col("text").as("txt")))
           .localCheckpoint(true) // training + epoch-0 write
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 2)
-          .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx", cents, nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
-        val w1 = feats(
+        val h = SemanticIndex.create("graft_q136_mm",
+          s"${Fixtures.scratchRoot}/mmcr", seed, 8, 2, Thresh)
+        val w1 = mmFeats(
           d.filter(col("doc_id") % 5 === 0)
             .select((col("doc_id") + 100000L).as("vec_id"), col("text").as("txt"))
           .unionByName(d.filter(col("doc_id") % 5 === 1)
@@ -5377,21 +5130,21 @@ object QueriesLlm {
           "an exact byte-copy passed the multimodal accept gate")
         require(acc1.count() > 0L,
           "the case-flipped stratum was wholly rejected — accept path dead")
-        SemanticIndex.commit(h, acc1, 1, nb)
+        SemanticIndex.commit(h, acc1, 1)
         // ---- THE OPERATIONS UNDER TEST, both at the epoch barrier:
-        // collapse epoch file sets + grow capacity nb -> 2nb, then
+        // collapse epoch file sets + double the bucket count, then
         // tombstone the full epoch-1 commit set (the accepted ids BY
         // CONSTRUCTION — what the store actually holds)
-        graft.sources.Bucketed.compact(spark, tbl, nb * 2, Seq("cell"), h.path)
-        SemanticIndex.retract(h, acc1.select("vec_id"), nb * 2)
+        val h2 = SemanticIndex.compact(h, h.buckets * 2)
+        SemanticIndex.retract(h2, acc1.select("vec_id"))
         // ---- probe wave against the compacted, retracted store
-        val w2 = feats(
+        val w2 = mmFeats(
           d.filter(col("doc_id") % 4 === 2)
             .select((col("doc_id") + 400000L).as("vec_id"), col("text").as("txt"))
           .unionByName(d.filter(col("doc_id") % 5 === 1)
             .select((col("doc_id") + 500000L).as("vec_id"),
               upper(col("text")).as("txt"))))
-        val acc2 = SemanticIndex.acceptWave(h, w2)
+        val acc2 = SemanticIndex.acceptWave(h2, w2)
         val retainedCopies = d.filter(col("doc_id") % 4 === 2)
           .select((col("doc_id") + 400000L).as("vec_id"))
         require(acc2.join(retainedCopies, Seq("vec_id"), "left_semi")
@@ -5406,16 +5159,15 @@ object QueriesLlm {
         require(nAcc == nRetr,
           s"only $nAcc of $nRetr copies of retracted content re-accepted — " +
             "ghost index rows survive retraction")
-        SemanticIndex.commit(h, acc2, 2, nb * 2)
+        SemanticIndex.commit(h2, acc2, 2)
         // epoch-11 accounting row: wave-1's accept set is retracted
         // from the store, so the rollup alone would not hash it
-        SemanticIndex.rollup(h).unionByName(
+        SemanticIndex.rollup(h2).unionByName(
             acc1.agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("sum_id"))
               .select(lit(11).as("epoch"), col("n_vecs"), col("sum_id")))
           .orderBy(col("epoch"))
       },
       Some {
-        import graft.operators.IvfKmeans
         s"""WITH dsrc AS (SELECT doc_id, text FROM documents),
            |${mmFeatsCte("f0", "(SELECT doc_id AS vec_id, text AS txt FROM dsrc)")},
            |${IvfKmeans.lloydCtes(8, 2, 8, 0L,
@@ -5497,15 +5249,10 @@ object QueriesLlm {
     // (per-entity, not per-class, sequence bookkeeping).
     Q("q137_multimodal_selective_retract",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
         val Thresh = 900000L; val FD = 61
-        val root = s"${Fixtures.scratchRoot}/mmsel"
-        val tbl = "graft_q137_mm"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
         val histD = (0 until FD).map(b =>
           s"size(filter(bg, x -> x = $b))").mkString(", ")
-        def feats(src: org.apache.spark.sql.DataFrame) = src // (vec_id, txt)
+        def feats(src: DataFrame) = src // (vec_id, txt)
           .select(col("vec_id"), TF.fingerprint(col("txt")).as("fp"),
             TF.tokens(lower(col("txt"))).as("t"))
           .filter(size(col("t")) >= 2)
@@ -5521,18 +5268,14 @@ object QueriesLlm {
         val seed = feats(d.select(col("doc_id").as("vec_id"),
             col("text").as("txt")))
           .localCheckpoint(true) // train + epoch-0 + cover sides + probes
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 2)
-          .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx", cents, nb, Thresh)
         // the index CARRIES the entity fingerprint as metadata (the
         // per-entity bookkeeping the reference anchor keeps) — so the
         // cover analysis reads fp off the bucket scan with no store
         // re-key, and the fingerprint-keyed tombstone derives from
         // the store itself
-        graft.sources.Bucketed.writeBucketed(
-          SemanticIndex.spilled(h, seed, Seq("fp")).withColumn("epoch", lit(0)),
-          tbl, nb, Seq("cell"), path = Some(h.path))
+        val h = SemanticIndex.create("graft_q137_mm",
+          s"${Fixtures.scratchRoot}/mmsel", seed, 8, 2, Thresh,
+          extra = Seq("fp"))
         // cover analysis: each content re-probes its crank-1 cell; a
         // cover is FOREIGN iff its text fingerprint differs, and the
         // selection only needs EXISTENCE. One cell-keyed ANTI join —
@@ -5553,7 +5296,7 @@ object QueriesLlm {
           .localCheckpoint(true) // retract + probe stratum + accounting
         require(tomb.count() > 0L,
           "empty tombstone — cover analysis found no self-only entity")
-        SemanticIndex.retract(h, tomb, nb)
+        SemanticIndex.retract(h, tomb)
         // probe strata reuse the seed feature rows under shifted ids
         // (fp rides along so the epoch-2 commit keeps the store's
         // metadata schema; acceptWave itself ignores it)
@@ -5589,13 +5332,8 @@ object QueriesLlm {
           "a copy of the RETAINED control entity re-entered — over-delete")
         // epoch-2 commit keeps the fingerprint metadata (joined back
         // from the wave — acceptWave's output drops extras)
-        graft.sources.Bucketed.writeBucketed(
-          SemanticIndex.spilled(h,
-              acc2.join(wave.select(col("vec_id"), col("fp")), "vec_id"),
-              Seq("fp"))
-            .withColumn("epoch", lit(2)),
-          tbl, nb, Seq("cell"), mode = "append", path = Some(h.path))
-        spark.catalog.refreshByPath(h.path)
+        SemanticIndex.commit(h,
+          acc2.join(wave.select(col("vec_id"), col("fp")), "vec_id"), 2)
         SemanticIndex.rollup(h)
           .unionByName(tomb.agg(count(lit(1)).as("n_vecs"),
               sum(col("vec_id")).as("sum_id"))
@@ -5607,7 +5345,6 @@ object QueriesLlm {
           .orderBy(col("epoch"))
       },
       Some {
-        import graft.operators.IvfKmeans
         // unrolled 61-term dot: same left-to-right summation order as
         // the prior fold (0.0 + x1 == x1 bit-exact for the nonnegative
         // histogram products), ~an order of magnitude less per-pair
@@ -5743,16 +5480,8 @@ object QueriesLlm {
       (spark, dir) => {
         import graft.functions.DedupConfig.HotBucketCap
         import graft.functions.MinhashPipeline.{contentFp, acceptAgainstIndexCapped}
-        val root = s"${Fixtures.scratchRoot}/idxacccap"
-        val docTable = "graft_q138_docs"
-        val bandTable = "graft_q138_bands"
-        spark.sql(s"DROP TABLE IF EXISTS $docTable")
-        spark.sql(s"DROP TABLE IF EXISTS $bandTable")
-        Fixtures.rmrf(new java.io.File(root))
         // q99/q109/q110's corpus contract
-        val corpus = table(spark, dir, "documents")
-          .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-          .select("doc_id", "lang", "text")
+        val corpus = textCorpus(table(spark, dir, "documents"))
         // flood source: first substantial doc (deterministic; 1 row,
         // read twice — seed family and wave copies)
         val fl = corpus.filter(length(col("text")) >= 50)
@@ -5765,16 +5494,11 @@ object QueriesLlm {
         // seed index = corpus + a 48-copy flood family (hot at cap 32)
         val seed = corpus.unionByName(copies(700000L, 48))
         val sig = signedDocs(seed).localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        graft.sources.Bucketed.writeBucketed(
-          sig.select(col("doc_id"), col("lang"), col("hl"), col("sz")),
-          docTable, nb, Seq("doc_id"), path = Some(s"$root/docs"))
         // band rows carry the content fingerprint the capped join
         // splits hot buckets by — written once at commit time
-        graft.sources.Bucketed.writeBucketed(
-          bandKeysOf(sig.withColumn("sg", contentFp(col("hl"))),
-            passthru = Seq("sg")),
-          bandTable, nb, Seq("bkey"), path = Some(s"$root/bands"))
+        val h = MinhashIndex.create("graft_q138",
+          s"${Fixtures.scratchRoot}/idxacccap",
+          sig.withColumn("sg", contentFp(col("hl"))), bandExtra = Seq("sg"))
         val wave = corpus.filter(col("doc_id") % 20 === 0)
           .withColumn("doc_id", col("doc_id") + 200000L) // exact copies -> reject
           .unionByName(copies(750000L, 6)) // flood re-sends -> reject THROUGH the hot bucket
@@ -5782,8 +5506,8 @@ object QueriesLlm {
             .withColumn("doc_id", col("doc_id") + 400000L)
             .withColumn("text", reverse(col("text")))) // decoys -> accept
         val wsig = signedDocs(wave).localCheckpoint(true)
-        val acc = acceptAgainstIndexCapped(wsig, docTable, bandTable,
-          HotBucketCap).localCheckpoint(true)
+        val acc = acceptAgainstIndexCapped(wsig, h, HotBucketCap)
+          .localCheckpoint(true)
         // recall-through-the-cap proof the oracle hash cannot give:
         // the flood family's wave copies must still be FOUND (rejected)
         // even though their bucket is over-cap

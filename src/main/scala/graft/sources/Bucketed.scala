@@ -110,6 +110,17 @@ object Bucketed {
     spark.catalog.refreshByPath(p)
   }
 
+  /** Drop `tables` from the catalog and delete `root` (Hadoop
+    * FileSystem API, as [[replaceWith]]) — the fresh start an index
+    * build takes before writing its epoch 0. */
+  def reset(spark: org.apache.spark.sql.SparkSession, tables: Seq[String],
+            root: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val p = new Path(root)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+  }
+
   /** Compact a bucketed table: rewrite it under a fresh bucket spec,
     * collapsing the one-file-set-per-append accumulation back to one
     * file set and (optionally) changing the bucket count.

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.functions.MinhashPipeline._
+import graft.operators.MinhashIndex
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -38,25 +39,13 @@ class IndexAcceptCapSpec extends SparkSpec {
   private def doc(i: Int): String =
     (0 until 12).map(j => word(i * 12 + j)).mkString(" ")
 
-  private def writeIdx(sigDf: DataFrame, tag: String): (String, String) = {
-    val (dt, bt) = (s"graft_idxcap_${tag}_docs", s"graft_idxcap_${tag}_bands")
-    spark.sql(s"DROP TABLE IF EXISTS $dt")
-    spark.sql(s"DROP TABLE IF EXISTS $bt")
-    graft.sources.Bucketed.writeBucketed(
-      sigDf.select(col("doc_id"), col("hl"), col("sz")),
-      dt, 4, Seq("doc_id"), path = Some(s"$root/${tag}_docs"))
-    graft.sources.Bucketed.writeBucketed(
-      bandKeysOf(sigDf.withColumn("sg", contentFp(col("hl"))),
-        passthru = Seq("sg")),
-      bt, 4, Seq("bkey"), path = Some(s"$root/${tag}_bands"))
-    (dt, bt)
-  }
+  private def writeIdx(sigDf: DataFrame, tag: String): MinhashIndex.Handle =
+    MinhashIndex.create(s"graft_idxcap_$tag", s"$root/$tag",
+      sigDf.withColumn("sg", contentFp(col("hl"))), bandExtra = Seq("sg"),
+      buckets = 4)
 
-  private def drop(t: (String, String)): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${t._1}")
-    spark.sql(s"DROP TABLE IF EXISTS ${t._2}")
-    graft.queries.Fixtures.rmrf(new java.io.File(root))
-  }
+  private def drop(h: MinhashIndex.Handle): Unit =
+    graft.sources.Bucketed.reset(spark, Seq(h.docTable, h.bandTable), root)
 
   test("benign corpus: capped accept equals uncapped accept exactly") {
     // families of size 3 (<= cap 8): every bucket under cap, so the
@@ -70,9 +59,9 @@ class IndexAcceptCapSpec extends SparkSpec {
           (1000L + i, if (i % 2 == 0) doc(i % 20) else doc(100 + i)))
         .toDF("doc_id", "text").withColumn("lang", lit("en"))
       val wsig = signedDocs(wave).localCheckpoint(true)
-      val capped = acceptAgainstIndexCapped(wsig, t._1, t._2, 8)
+      val capped = acceptAgainstIndexCapped(wsig, t, 8)
         .select("doc_id").as[Long].collect().sorted.toSeq
-      val base = acceptAgainstIndex(wsig, t._1, t._2)
+      val base = acceptAgainstIndex(wsig, t)
         .select("doc_id").as[Long].collect().sorted.toSeq
       assert(capped == base,
         s"capped=$capped base=$base must agree when no bucket is hot")
@@ -97,16 +86,16 @@ class IndexAcceptCapSpec extends SparkSpec {
           (5 until 10).map(i => (2000L + i, doc(500 + i))))
         .toDF("doc_id", "text").withColumn("lang", lit("en"))
       val wsig = signedDocs(wave).localCheckpoint(true)
-      val acc = acceptAgainstIndexCapped(wsig, t._1, t._2, cap)
+      val acc = acceptAgainstIndexCapped(wsig, t, cap)
         .select("doc_id").as[Long].collect().sorted.toSeq
       assert(acc == (2005L to 2009L),
         s"flood re-sends must be rejected, novel docs accepted: $acc")
       // the BOUND: capped candidates for the 5 flood probes are at
       // most cap per band each (the uncapped join would pair each
       // with all 50 family members per shared band)
-      val cappedPairs = verifiedDupPairsCapped(wsig, t._1, t._2, cap)
+      val cappedPairs = verifiedDupPairsCapped(wsig, t, cap)
         .filter(col("w_id") < 2005L).count()
-      val basePairs = verifiedDupPairs(wsig, t._1, t._2)
+      val basePairs = verifiedDupPairs(wsig, t)
         .filter(col("w_id") < 2005L).count()
       assert(basePairs == 5L * 50L,
         s"uncapped pairs should be every (probe, member): $basePairs")
@@ -128,7 +117,7 @@ class IndexAcceptCapSpec extends SparkSpec {
       val wave = (0 until 10).map(i => (3000L + i, doc(i)))
         .toDF("doc_id", "text").withColumn("lang", lit("en"))
       val wsig = signedDocs(wave).localCheckpoint(true)
-      val plan = verifiedDupPairsCapped(wsig, t._1, t._2, 8)
+      val plan = verifiedDupPairsCapped(wsig, t, 8)
         .queryExecution.executedPlan.toString
       // ONE bkey exchange in the whole plan — the wave's. The band
       // table is scanned twice (occupancy + windowed cap) and joined

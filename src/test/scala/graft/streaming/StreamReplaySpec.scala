@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 import graft.functions.MinhashPipeline.{acceptAgainstIndex, signedDocs}
-import graft.functions.{VectorFunctions => VF}
-import graft.operators.{IvfKmeans, SemanticIndex}
+import graft.operators.{MinhashIndex, SemanticIndex}
+import graft.queries.QueriesLlm
 
 /** Replay / retry idempotence of the streaming index gates (q91, q109,
   * q120, q132) — the properties their in-gate replay legs used to
@@ -34,7 +34,8 @@ import graft.operators.{IvfKmeans, SemanticIndex}
   * their committed bucketed stores, wave sources, and staged batch
   * directories on disk under the scratch root — then replays the
   * wave / staged files against the committed state through the SAME
-  * public operators the gates use. (The third layer, per-batch
+  * public operators and shared definitions (embedding frame, seed,
+  * cell training constants, waves) the gates use. (The third layer, per-batch
   * staging idempotence, is structural: Structured Streaming replays a
   * failed batch under the same batchId and the gates stage with
   * per-batch OVERWRITE into a batchId-keyed directory, so a retry
@@ -48,12 +49,12 @@ class StreamReplaySpec extends SparkSpec {
   test("q109: post-commit wave-1 replay accepts 0; staged re-commit adds 0") {
     graft.SparkEntry.queries("q109_stream_dedup")(spark, sf).collect()
     val root = s"$scratch/streamdedup"
+    val h = MinhashIndex.open(spark, "graft_q109", root)
     // whole-wave replay: re-sign wave 1 from its on-disk source and
     // re-run acceptance against the committed index — must accept 0
     val w1 = spark.read.parquet(s"$root/src1")
     val replayAccepted =
-      acceptAgainstIndex(signedDocs(w1).localCheckpoint(true),
-        "graft_q109_docs", "graft_q109_bands").count()
+      acceptAgainstIndex(signedDocs(w1).localCheckpoint(true), h).count()
     assert(replayAccepted == 0L,
       s"checkpoint-cleared replay of wave 1 would commit $replayAccepted docs")
     // commit-level retry: the staged epoch-1 batch dirs are still on
@@ -62,28 +63,22 @@ class StreamReplaySpec extends SparkSpec {
       w1.select(col("doc_id"), col("lang"), col("text")).limit(0)).schema
     val staged = spark.read.schema(stagedSchema)
       .parquet(s"$root/stage_1/batch=*")
-    val reAdded = staged
-      .join(spark.table("graft_q109_docs").select("doc_id"),
-        Seq("doc_id"), "left_anti").count()
+    val reAdded = MinhashIndex.uncommitted(h, staged).count()
     assert(reAdded == 0L,
       s"commit-level retry of epoch 1 would add $reAdded docs")
   }
 
   test("q132/q120: post-commit wave-1 replay accepts 0 vectors; staged re-commit adds 0") {
     graft.SparkEntry.queries("q132_stream_semantic_dedup")(spark, sf).collect()
-    val Off = 4000L; val Thresh = 400000L
     val root = s"$scratch/semstream"
-    // rebuild the frozen handle exactly as the gate does (IvfKmeans
-    // training is deterministic: rank-based seeding, fixed iters)
-    val e = graft.queries.table(spark, sf, "embeddings")
-      .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-        IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-    val seed = e.filter(col("vec_id") % 2 === 0)
-    val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-      .localCheckpoint(true)
-    val h = SemanticIndex.Handle(spark, "graft_q132_vecs", s"$root/idx_vecs",
-      cents, graft.functions.DedupConfig.IndexBuckets, Thresh)
+    // rebuild the frozen handle from the gate's own definitions
+    // (IvfKmeans training is deterministic: rank-based seeding, fixed
+    // iters)
+    val e = QueriesLlm.semFrame(graft.queries.table(spark, sf, "embeddings"))
+    val cents = SemanticIndex.train(QueriesLlm.semSeed(e), QueriesLlm.SemK,
+      QueriesLlm.SemIters)
+    val h = SemanticIndex.open(spark, "graft_q132_vecs", root, cents,
+      QueriesLlm.SemThresh)
     // whole-wave replay from the on-disk wave source
     val w1 = spark.read.parquet(s"$root/src1")
     val replayAccepted = SemanticIndex.acceptWave(h, w1).count()
@@ -91,22 +86,16 @@ class StreamReplaySpec extends SparkSpec {
       s"checkpoint-cleared replay of wave 1 would commit $replayAccepted vectors")
     // commit-level retry over the staged epoch-1 files
     val staged = spark.read.schema(w1.schema).parquet(s"$root/stage_1/batch=*")
-    val reAdded = staged
-      .join(spark.table("graft_q132_vecs").select("vec_id").distinct(),
-        Seq("vec_id"), "left_anti").count()
+    val reAdded = SemanticIndex.uncommitted(h, staged).count()
     assert(reAdded == 0L,
       s"commit-level retry of epoch 1 would add $reAdded vectors")
     // q120 shares the wave strata and the acceptWave operator; its
     // (batch) replay property is the same acceptWave == 0 assertion,
     // exercised against its own committed store
     graft.SparkEntry.queries("q120_incremental_semantic_dedup")(spark, sf).collect()
-    val h120 = h.copy(table = "graft_q120_vecs",
-      path = s"$scratch/semdedup/idx_vecs")
-    val w1b = e.filter(col("vec_id") % 20 === 1)
-      .withColumn("vec_id", col("vec_id") + 100000L)
-      .unionByName(e.filter(col("vec_id") % 10 === 0)
-        .withColumn("vec_id", col("vec_id") + 200000L))
-    val re120 = SemanticIndex.acceptWave(h120, w1b).count()
+    val h120 = SemanticIndex.open(spark, "graft_q120_vecs",
+      s"$scratch/semdedup", cents, QueriesLlm.SemThresh)
+    val re120 = SemanticIndex.acceptWave(h120, QueriesLlm.semWaves(e)._1).count()
     assert(re120 == 0L,
       s"post-commit replay of q120's wave 1 accepted $re120 vectors")
   }
